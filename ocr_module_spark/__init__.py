@@ -8,8 +8,8 @@ reference extraction pipeline (RidgeBull/ocr_module, studied read-only at
   (ocr_module/domain/entities/) becomes one lazy DataFrame plan over a
   Common-Crawl-style ``pages`` table ``(url, warc_ts, html, text, lang)``;
 * its per-document parse/classify/assemble logic becomes pure Python
-  functions shared verbatim between the pytest oracle and Arrow-batched
-  pandas UDFs (``mapInPandas``) — which is what makes the per-url
+  functions shared verbatim between the pytest oracle and one
+  Arrow-batched ``mapInArrow`` stage — which is what makes the per-url
   byte-identity contract testable;
 * its dict-lookup joins, running counters and grouping loops become real
   Spark joins, window functions and aggregations (see SURVEY.md §2 for the

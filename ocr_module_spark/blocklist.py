@@ -46,7 +46,7 @@ def is_blocklist(payload: bytes) -> bool:
 
 def parse_blocklist(payload: bytes) -> ParseResult:
     """Parse one block-list JSON payload into ordered blocks + payloads."""
-    result = ParseResult()
+    result = ParseResult(path="blocklist")
     try:
         doc = json.loads(payload.decode("utf-8", errors="replace"))
         pages = doc.get("pages", [])

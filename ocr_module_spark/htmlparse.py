@@ -117,6 +117,9 @@ class Block:
 class ParseResult:
     blocks: List[Block] = field(default_factory=list)
     payloads: List[Tuple[int, str]] = field(default_factory=list)  # (page, latex)
+    # the parser that produced this result: 'fast' | 'stdlib' | 'blocklist',
+    # or 'empty' for a missing payload (feeds the sink's parse-path counters)
+    path: str = "empty"
 
 
 class _Extractor(HTMLParser):
@@ -444,14 +447,12 @@ class _Extractor(HTMLParser):
         self._flush_block()
 
 
-USE_FAST_TOKENIZER = True
-
-
 def parse_html_stdlib(payload: bytes) -> ParseResult:
     """Reference tokenization path: stdlib html.parser (the executable
     spec; the fast path must match it byte-for-byte or is not used)."""
     text = payload.decode("utf-8", errors="replace")
     p = _Extractor()
+    p.result.path = "stdlib"
     try:
         p.feed(text)
         p.close()
@@ -468,24 +469,10 @@ def parse_html(payload: bytes) -> ParseResult:
     (~3× per-doc speedup, htmlparse_fast.py), stdlib html.parser for
     everything else — equivalence property-tested in
     tests/test_fast_tokenizer.py, byte-identity pinned by the golden
-    fixtures either way.
+    fixtures either way. ``result.path`` says which one ran.
     """
-    if USE_FAST_TOKENIZER:
-        from .htmlparse_fast import parse_html_fast
-        result = parse_html_fast(payload)
-        if result is not None:
-            return result
+    from .htmlparse_fast import parse_html_fast
+    result = parse_html_fast(payload)
+    if result is not None:
+        return result
     return parse_html_stdlib(payload)
-
-
-def parse_html_tagged(payload: bytes):
-    """``parse_html`` plus which tokenizer ran: ('fast' | 'stdlib').
-
-    Identical dispatch to ``parse_html``; the tag feeds the extraction
-    sink's fallback-rate counters (sinks.run_extraction)."""
-    if USE_FAST_TOKENIZER:
-        from .htmlparse_fast import parse_html_fast
-        result = parse_html_fast(payload)
-        if result is not None:
-            return result, "fast"
-    return parse_html_stdlib(payload), "stdlib"

@@ -349,4 +349,5 @@ def parse_html_fast(payload: bytes) -> Optional[object]:
         p._flush_block()
     except Exception:
         return None
+    p.result.path = "fast"
     return p.result

@@ -4,7 +4,7 @@
 extraction-result dict out (FIXTURES.md §5 schema). It composes the shared
 parse (htmlparse/blocklist), classification (classify) and placeholder-
 alignment logic. The Spark pipeline's fast path runs THIS function inside
-``mapInPandas`` over Arrow batches; pytest runs it directly on golden
+one ``mapInArrow`` stage; pytest runs it directly on golden
 fixtures. One implementation, two harnesses — that is how the per-url
 byte-identity contract of BASELINE.json is pinned.
 
@@ -42,12 +42,12 @@ _CTRL_ESC_RE = re.compile(r"(?<!\\)((?:\\\\)*)\\u00([0-9a-f]{2})")
 
 from .blocklist import is_blocklist, parse_blocklist
 from .classify import keep_block
-from .htmlparse import (FORMULA_TOKEN, ParseResult, parse_html,
-                        parse_html_tagged)
+from .htmlparse import FORMULA_TOKEN, ParseResult, parse_html
 
 
 def parse_payload(payload: Optional[bytes]) -> ParseResult:
-    """Dispatch one payload to the HTML or block-list parser."""
+    """Dispatch one payload to the HTML or block-list parser; the result's
+    ``path`` names the parser that ran ('empty' when there is no payload)."""
     if not payload:
         return ParseResult()
     if is_blocklist(payload):
@@ -56,17 +56,9 @@ def parse_payload(payload: Optional[bytes]) -> ParseResult:
 
 
 def parse_payload_tagged(payload: Optional[bytes]):
-    """``parse_payload`` plus which parser actually ran — feeds the sink's
-    ``docs_parse_*`` counters (at crawl scale a fallback-rate jump is the
-    earliest sign the fast-tokenizer subset no longer matches the input).
-
-    Returns ``(ParseResult, path)`` with path in
-    {'empty', 'blocklist', 'fast', 'stdlib'}."""
-    if not payload:
-        return ParseResult(), "empty"
-    if is_blocklist(payload):
-        return parse_blocklist(payload), "blocklist"
-    return parse_html_tagged(payload)
+    """``(parse_payload(payload), path)``."""
+    parsed = parse_payload(payload)
+    return parsed, parsed.path
 
 
 def rewrite_placeholders(text: str, start_index: int) -> str:
@@ -130,17 +122,18 @@ def document_to_json(result: Dict) -> str:
 
 def extract_document(url: str, payload: Optional[bytes]) -> Dict:
     """Extract one document. Returns the FIXTURES.md §5 row as a dict."""
-    return _assemble_document(url, parse_payload(payload))
+    return assemble_document(url, parse_payload(payload))
 
 
 def extract_document_tagged(url: str, payload: Optional[bytes]):
-    """``extract_document`` plus the parse path that produced it (see
-    ``parse_payload_tagged``); same row dict, assembled by the same code."""
-    parsed, path = parse_payload_tagged(payload)
-    return _assemble_document(url, parsed), path
+    """``(extract_document(url, payload), path)``."""
+    parsed = parse_payload(payload)
+    return assemble_document(url, parsed), parsed.path
 
 
-def _assemble_document(url: str, parsed: ParseResult) -> Dict:
+def assemble_document(url: str, parsed: ParseResult) -> Dict:
+    """Classify, id, align and assemble one parsed document into the
+    FIXTURES.md §5 row (``extract_document`` minus the parse)."""
     blocks = parsed.blocks
 
     # classification (boilerplate strip)

@@ -2,15 +2,15 @@
 
 Two equivalent expressions of the same semantics (tests assert they agree):
 
-**Fast path** — ``extract(df)``: scan → salted repartition on url host →
-one ``mapInPandas`` stage that runs the pure per-document oracle
-(oracle.extract_document) over Arrow batches and emits the final
-EXTRACT_SCHEMA rows. Zero shuffles after the repartition; parse, classify,
-id-assignment, placeholder alignment and span assembly all pipeline inside
-one whole stage. This is the production plan: at 10^12 documents the work
-is embarrassingly parallel per document, so the shuffle-free single-stage
-plan is strictly better than exploding nodes across the cluster and
-re-grouping them.
+**Fast path** — ``extract(df)``: scan → (optional) salted repartition on
+url host → one ``mapInArrow`` stage that runs the pure per-document oracle
+(oracle.parse_payload + oracle.assemble_document) over Arrow batches and
+emits the final EXTRACT_SCHEMA rows. Zero shuffles after the repartition;
+parse, classify, id-assignment, placeholder alignment and span assembly all
+pipeline inside one whole stage. This is the production plan: at 10^12
+documents the work is embarrassingly parallel per document, so the
+shuffle-free single-stage plan is strictly better than exploding nodes
+across the cluster and re-grouping them.
 
 **Relational path** — ``parse_nodes → classify_nodes → assign_ids →
 rewrite_placeholders_df → assemble_text / sections_df / mismatch_df``:
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from . import oracle
 from .classify import DROP_ROLES, MIN_TEXT_LEN
-from .schemas import EXTRACT_SCHEMA, NODES_SCHEMA
+from .schemas import EXTRACT_TAGGED_SCHEMA, NODES_SCHEMA
 
 SALT_BUCKETS = 8
 
@@ -78,26 +78,13 @@ def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None,
 def _extract_one(url, payload):
     """Per-document extraction with failure isolation: one hostile
     payload yields an error row, never a task failure (reference's
-    per-page fallback artifact, translate_pdf.py:114-125)."""
+    per-page fallback artifact, translate_pdf.py:114-125). The row says
+    which parser ran (``parse_path``, 'error' on failure)."""
     try:
-        r = oracle.extract_document(
-            url, bytes(payload) if payload is not None else None)
+        parsed = oracle.parse_payload(payload)
+        r = oracle.assemble_document(url, parsed)
         r["error"] = None
-        return r
-    except Exception as exc:  # noqa: BLE001 - isolation boundary
-        return {"url": url, "text": "", "spans": [], "sections": [],
-                "n_pages": 0, "mismatch_flag": False,
-                "error": f"{type(exc).__name__}: {exc}"[:500]}
-
-
-def _extract_one_tagged(url, payload):
-    """``_extract_one`` that also reports which parser ran (the
-    ``parse_path`` column feeding the sink's fallback-rate counters)."""
-    try:
-        r, path = oracle.extract_document_tagged(
-            url, bytes(payload) if payload is not None else None)
-        r["error"] = None
-        r["parse_path"] = path
+        r["parse_path"] = parsed.path
         return r
     except Exception as exc:  # noqa: BLE001 - isolation boundary
         return {"url": url, "text": "", "spans": [], "sections": [],
@@ -106,72 +93,31 @@ def _extract_one_tagged(url, payload):
                 "parse_path": "error"}
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        recs = []
-        for url, payload in zip(pdf["url"], pdf["html"]):
-            r = _extract_one(url, payload)
-            recs.append((r["url"], r["text"],
-                         [(s["paragraph_id"], s["page_number"], s["role"],
-                           s["bbox"], s["content"]) for s in r["spans"]],
-                         [(s["section_id"], s["paragraph_ids"], s["table_ids"],
-                           s["figure_ids"]) for s in r["sections"]],
-                         r["n_pages"], r["mismatch_flag"], r["error"]))
-        yield pd.DataFrame.from_records(
-            recs, columns=["url", "text", "spans", "sections",
-                           "n_pages", "mismatch_flag", "error"])
-
-
-def _arrow_batches_impl(batches, tagged: bool):
-    """Arrow-native variant of _extract_batches: builds RecordBatches
-    directly with pa.array, skipping the pandas object-column
-    intermediate. Measured throughput-equal to the pandas path end-to-end
-    (the conversion cost just moves); kept as the default because it
-    removes pandas' nested-object conversion surface from the hot path
-    and the worker ships one fewer copy of each batch. With ``tagged``
-    the row carries the parse_path column for the sink's counters."""
+def _extract_arrow(batches):
+    """The extraction stage's batch function: (url, html) RecordBatches in,
+    EXTRACT_TAGGED_SCHEMA RecordBatches out, built directly with pa.array."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    span_t = pa.struct([
-        ("paragraph_id", pa.int32()), ("page_number", pa.int32()),
-        ("role", pa.string()), ("bbox", pa.list_(pa.float64())),
-        ("content", pa.string())])
-    sec_t = pa.struct([
-        ("section_id", pa.int32()), ("paragraph_ids", pa.list_(pa.int32())),
-        ("table_ids", pa.list_(pa.int32())), ("figure_ids", pa.list_(pa.int32()))])
-    cols = [
-        ("url", pa.string()), ("text", pa.string()),
-        ("spans", pa.list_(span_t)), ("sections", pa.list_(sec_t)),
-        ("n_pages", pa.int32()), ("mismatch_flag", pa.bool_()),
-        ("error", pa.string())]
-    if tagged:
-        cols.append(("parse_path", pa.string()))
-    schema = pa.schema(cols)
-    one = _extract_one_tagged if tagged else _extract_one
+    schema = to_arrow_schema(EXTRACT_TAGGED_SCHEMA)
     for batch in batches:
         urls = batch.column("url").to_pylist()
         payloads = batch.column("html").to_pylist()
-        res = [one(u, p) for u, p in zip(urls, payloads)]
+        res = [_extract_one(u, p) for u, p in zip(urls, payloads)]
         yield pa.RecordBatch.from_arrays(
-            [pa.array([r[name] for r in res], typ) for name, typ in cols],
+            [pa.array([r[f.name] for r in res], f.type) for f in schema],
             schema=schema)
-
-
-def _extract_arrow_batches(batches):
-    yield from _arrow_batches_impl(batches, tagged=False)
-
-
-def _extract_arrow_batches_tagged(batches):
-    yield from _arrow_batches_impl(batches, tagged=True)
 
 
 def extract(pages: DataFrame, repartition: bool = False,
             num_partitions: Optional[int] = None,
-            use_arrow: bool = True,
             tag_parse_path: bool = False) -> DataFrame:
     """Full extraction, one Arrow-batched stage per partition.
 
     Runs the exact oracle per document (byte-identity by construction).
+    With ``tag_parse_path`` the rows keep the ``parse_path`` column
+    (EXTRACT_TAGGED_SCHEMA) for the sink's counters; otherwise it is
+    projected away (EXTRACT_SCHEMA) — the same stage either way.
 
     ``repartition`` defaults to **False**: the parse is embarrassingly
     parallel per document, so the production plan is *scan-aligned* — the
@@ -191,15 +137,8 @@ def extract(pages: DataFrame, repartition: bool = False,
     df = pages.select("url", "html")
     if repartition or num_partitions:
         df = salted_repartition(df, num_partitions)
-    if tag_parse_path:
-        # sink instrumentation: row carries which parser ran; the caller
-        # aggregates and drops the column (sinks.run_extraction)
-        from .schemas import EXTRACT_TAGGED_SCHEMA
-        return df.mapInArrow(
-            _extract_arrow_batches_tagged, schema=EXTRACT_TAGGED_SCHEMA)
-    if use_arrow:
-        return df.mapInArrow(_extract_arrow_batches, schema=EXTRACT_SCHEMA)
-    return df.mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
+    out = df.mapInArrow(_extract_arrow, schema=EXTRACT_TAGGED_SCHEMA)
+    return out if tag_parse_path else out.drop("parse_path")
 
 
 # ---------------------------------------------------------------------------

@@ -74,10 +74,11 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("error", T.StringType(), True),
 ])
 
-# EXTRACT_SCHEMA + which parser produced the row ('fast' regex tokenizer,
-# 'stdlib' html.parser fallback, 'blocklist' PDF-derived, 'empty', 'error')
-# — consumed by the sink's observe() fallback-rate counters, dropped
-# before the data is written
+# the extraction stage's output (pipeline.extract's one mapInArrow; its
+# Arrow schema is derived from this): EXTRACT_SCHEMA + which parser
+# produced the row ('fast' regex tokenizer, 'stdlib' html.parser fallback,
+# 'blocklist' PDF-derived, 'empty', 'error') — consumed by the sink's
+# observe() parse-path counters; dropped before the data is written
 EXTRACT_TAGGED_SCHEMA = T.StructType(
     EXTRACT_SCHEMA.fields
     + [T.StructField("parse_path", T.StringType(), False)])

@@ -245,15 +245,18 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         F.sum(F.length("text")).alias("bytes_text_out"),
         F.sum(F.col("mismatch_flag").cast("long")).alias("docs_mismatched"),
         F.sum(F.col("error").isNotNull().cast("long")).alias("docs_failed"),
-        # tokenizer-path split: at crawl scale a docs_parse_fallback jump
-        # is the earliest sign the input drifted out of the fast subset
-        # (each fallback doc parses ~1.5x slower)
+        # parse-path split (with docs_failed, every doc counted once):
+        # at crawl scale a docs_parse_fallback jump is the earliest sign
+        # the input drifted out of the fast subset (each fallback doc
+        # parses ~1.5x slower)
         F.sum((F.col("parse_path") == "fast").cast("long"))
          .alias("docs_parse_fast"),
         F.sum((F.col("parse_path") == "stdlib").cast("long"))
          .alias("docs_parse_fallback"),
         F.sum((F.col("parse_path") == "blocklist").cast("long"))
          .alias("docs_parse_blocklist"),
+        F.sum((F.col("parse_path") == "empty").cast("long"))
+         .alias("docs_parse_empty"),
     ).drop("parse_path")
     data_dir = os.path.join(out_dir, "data")
     out.write.mode("append").parquet(data_dir)
@@ -275,7 +278,7 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         "docs_out": 0, "n_partitions": 0, "nodes_classified": 0,
         "bytes_text_out": 0, "docs_mismatched": 0, "docs_failed": 0,
         "docs_parse_fast": 0, "docs_parse_fallback": 0,
-        "docs_parse_blocklist": 0}))
+        "docs_parse_blocklist": 0, "docs_parse_empty": 0}))
 
     manifest_dir = os.path.join(out_dir, "_manifest")
     os.makedirs(manifest_dir, exist_ok=True)

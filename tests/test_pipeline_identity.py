@@ -116,21 +116,39 @@ def test_extract_skew_plan_has_single_exchange(pages):
 
 def test_per_document_failure_isolation(spark):
     """A hostile payload yields an error row, never a task failure
-    (reference per-page fallback, translate_pdf.py:114-125; SURVEY §3.3)."""
+    (reference per-page fallback, translate_pdf.py:114-125; SURVEY §3.3),
+    and every row records which parser ran: fast, stdlib fallback,
+    block-list, empty (null payload) or error."""
     import json
+    from test_fast_tokenizer import ADVERSARIAL_FALLBACK
+    from ocr_module_spark.schemas import EXTRACT_SCHEMA
     bad = json.dumps({"format": "blocks", "pages": [
         {"width": "not-a-number", "height": 11.0,
          "blocks": [[0, 0, 1, 1, "x", 0, 0]]}]}).encode()
-    good = corpus.payload_for(0)
-    df = spark.createDataFrame(
-        [("u-bad", bad), ("u-good", good)], "url string, html binary")
-    rows = {r["url"]: r for r in pipeline.extract(df).collect()}
+    payloads = {
+        "u-good": corpus.payload_for(0),
+        "u-stdlib": ADVERSARIAL_FALLBACK[0],
+        "u-blocklist": corpus.payload_for(corpus.SHAPES.index("P1")),
+        "u-null": None,
+        "u-bad": bad,
+    }
+    df = spark.createDataFrame(list(payloads.items()),
+                               "url string, html binary")
+    assert pipeline.extract(df).schema == EXTRACT_SCHEMA
+    rows = {r["url"]: r
+            for r in pipeline.extract(df, tag_parse_path=True).collect()}
     assert rows["u-bad"]["error"] is not None
     assert "ValueError" in rows["u-bad"]["error"]
     assert rows["u-bad"]["text"] == "" and rows["u-bad"]["spans"] == []
-    assert rows["u-good"]["error"] is None
-    assert rows["u-good"]["text"] == oracle.extract_document(
-        "u-good", good)["text"]
+    assert rows["u-bad"]["parse_path"] == "error"
+    for url, path in [("u-good", "fast"), ("u-stdlib", "stdlib"),
+                      ("u-blocklist", "blocklist"), ("u-null", "empty")]:
+        r = rows[url]
+        assert r["error"] is None, url
+        assert r["parse_path"] == path, url
+        assert oracle.parse_payload_tagged(payloads[url])[1] == path, url
+        assert r["text"] == oracle.extract_document(
+            url, payloads[url])["text"], url
 
 
 def test_null_html_payload_yields_empty_document(spark):

@@ -37,17 +37,28 @@ def test_resume_skips_committed_urls(spark, out_dir):
 
 def test_parse_path_counters(spark, out_dir):
     """Tokenizer-path observability: every doc is attributed to exactly one
-    parser, the chromed HTML corpus takes the fast path with ZERO stdlib
-    fallbacks (a fallback storm here means the fast subset regressed), and
-    the written data does not carry the instrumentation column."""
+    parser (or to docs_failed), the chromed HTML corpus takes the fast path
+    with ZERO stdlib fallbacks (a fallback storm here means the fast subset
+    regressed), and the written data does not carry the instrumentation
+    column."""
+    import json
     n = 160
-    m = sinks.run_extraction(spark, corpus.pages_df(spark, n), out_dir)
+    hostile = json.dumps({"format": "blocks", "pages": [
+        {"width": "not-a-number", "height": 11.0,
+         "blocks": [[0, 0, 1, 1, "x", 0, 0]]}]}).encode()
+    extra = spark.createDataFrame(
+        [("u-null", None), ("u-hostile", hostile)],
+        "url string, html binary")
+    pages = corpus.pages_df(spark, n).select("url", "html").unionByName(extra)
+    m = sinks.run_extraction(spark, pages, out_dir)
     n_blocklist = sum(1 for i in range(n) if corpus.shape_for(i) == "P1")
     assert m["docs_parse_blocklist"] == n_blocklist
     assert m["docs_parse_fallback"] == 0
     assert m["docs_parse_fast"] == n - n_blocklist
+    assert m["docs_parse_empty"] == 1 and m["docs_failed"] == 1
     assert (m["docs_parse_fast"] + m["docs_parse_fallback"]
-            + m["docs_parse_blocklist"]) == m["docs_out"]
+            + m["docs_parse_blocklist"] + m["docs_parse_empty"]
+            + m["docs_failed"]) == m["docs_out"] == n + 2
     data = spark.read.parquet(os.path.join(out_dir, "data"))
     assert "parse_path" not in data.columns
 
