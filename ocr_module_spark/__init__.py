@@ -20,4 +20,17 @@ DataFrame/Catalyst-first with explicit skew handling (salted repartition on
 url host) and an idempotent, resumable parquet sink.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# Inside a Spark Python worker (never on the driver): stop every task
+# from re-reading pyspark.zip's directory (see deploy.py). A worker has
+# always loaded pyspark; a plain import of the package does not load it.
+if "pyspark" in sys.modules:
+    from pyspark import TaskContext
+
+    if TaskContext.get() is not None:
+        from ocr_module_spark.deploy import install_zip_cache
+
+        install_zip_cache()

@@ -353,8 +353,7 @@ def decode_corpus(enc: DataFrame, vocab: dict[str, int],
     # make_valid_utf8 then repairs any malformed sequence to U+FFFD —
     # the lenient binary->string path (F.decode REPORTs and kills the
     # task on malformed input in Spark 4)
-    raw = F.expr("make_valid_utf8(cast(encode(concat_ws('', _syms), "
-                 "'ISO-8859-1') as string))")
+    raw = F.make_valid_utf8(
+        F.encode(F.concat_ws("", syms), "ISO-8859-1").cast("string"))
     text = F.rtrim(F.regexp_replace(raw, END, " "))
-    return (enc.withColumn("_syms", syms)
-            .select(*keep, text.alias("text")))
+    return enc.select(*keep, text.alias("text"))

@@ -374,6 +374,11 @@ def iter_warc_stream(data: bytes, warc_file: str,
                 "warc_offset": off, "warc_length": ln,
                 "payload_sha256": None, "error": f"container: {err}"}
             return
+        # _parse_member must not raise: every malformed-record failure
+        # (ValueError, zlib.error, EOFError, OSError) comes back as an
+        # error row, so one bad record never aborts the rest of the
+        # container. read_warc's batches and read_warc_offsets rely on
+        # it; _index_member keeps the same contract for iter_warc_index.
         r = _parse_member(member, warc_file, off, ln, want)
         if r is not None:
             yield r
@@ -753,7 +758,9 @@ def iter_warc_index(data: bytes, warc_file: str,
     framing implementation, no copy to drift); a container whose
     framing breaks mid-walk yields one marker row for the tail with the
     scan reader's offsets (gz: ``(-1, -1)``; members before the
-    corruption still index)."""
+    corruption still index). The marker drops the framing error text:
+    ``CDX_SCHEMA`` has no error column, whereas
+    :func:`iter_warc_stream` keeps it as ``"container: <err>"``."""
     for kind, member, off, ln, _err in _iter_member_frames(data):
         if kind == "tail":
             yield {"url": None, "warc_file": warc_file,

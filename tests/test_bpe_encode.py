@@ -248,6 +248,10 @@ def test_decode_byte_fallback_preserves_boundaries(spark):
     dec = decode_corpus(enc, vocab).collect()[0]["text"]
     assert dec == "ab zz ba"
     assert "�" not in dec
+    # a caller's own `_syms` column rides through `keep` untouched
+    mine = enc.withColumn("_syms", F.lit("caller"))
+    got = decode_corpus(mine, vocab, keep=("doc_id", "_syms")).collect()
+    assert [(r["_syms"], r["text"]) for r in got] == [("caller", dec)]
 
 
 def test_decode_invalid_id_renders_replacement(spark):
