@@ -688,7 +688,8 @@ def build_dedup_index(docs: DataFrame) -> DataFrame:
 
 def dedup_against_index(new_docs: DataFrame, index: DataFrame,
                         min_agree: int = IDX_MIN_AGREE,
-                        exclude_self: bool = False) -> DataFrame:
+                        exclude_self: bool = False,
+                        new_idx: DataFrame | None = None) -> DataFrame:
     """Dedup a NEW batch against an existing :func:`build_dedup_index`
     table — the daily-refresh operator: a re-crawled or boilerplate-
     near-dup page is dropped without touching the stored corpus text.
@@ -712,8 +713,15 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
     value; that population is bounded by dropping over-popular group
     buckets upstream (standard LSH hygiene) — the synthetic corpora
     never hit it, so no cap constant is pinned here.
+
+    ``new_idx`` is the new batch's own :func:`build_dedup_index` rows.
+    The probe reads them three times (exact key, signature groups,
+    doc→group map), so a caller that also appends the kept docs' rows
+    to the index builds them once, materializes them and passes them
+    here; ``None`` builds them from ``new_docs`` inside the plan.
     """
-    new_idx = build_dedup_index(new_docs)
+    if new_idx is None:
+        new_idx = build_dedup_index(new_docs)
     # exact flag is MEMBERSHIP only — LEFT SEMI on norm_md5, so a
     # boilerplate norm key shared by k indexed docs costs one hash
     # probe, never k materialized pair rows (the join+distinct form

@@ -15,8 +15,9 @@ into that loop, one epoch per snapshot:
     5. dedup the fresh docs against the cross-snapshot signature index
        (dedup.dedup_against_index, exclude_self — torn-epoch
        idempotent) and append their index rows
-    6. commit: overwrite the fingerprint table, then write the
-       epoch's ``_refresh_complete.json`` marker (the commit point)
+    6. commit: overwrite the fingerprint table (the diff's new side),
+       then write the epoch's ``_refresh_complete.json`` marker (the
+       commit point)
 
 ``refresh_corpus`` is the reader: per-epoch extraction outputs collapse
 to the LATEST revision per url (greatest-epoch struct — one shuffle of
@@ -37,9 +38,13 @@ REUSES that epoch id and replays it to the identical state
 Scale notes: the diff and fingerprint frames are ~48 B/doc; extraction
 work is proportional to |added| + |changed|, dedup work to the same
 (the index is ~0.3% of corpus bytes and the stored text is never
-rescanned); the only full-snapshot pass is the fingerprint projection
-itself, which prunes to (url, html) and is the unavoidable "read the
-new snapshot once". ``compact_index`` (dedup.compact_dedup_index +
+rescanned). The snapshot's html is hashed once: the diff is
+materialized once, and the committed fingerprint table is its new
+side, not a second projection of the snapshot. The fresh docs'
+signatures are built once per epoch; the probe reads them and the
+index shard is their kept rows. Every counter comes from ``observe`` on
+a checkpoint or a write the epoch performs anyway — no ``count()`` or
+``collect()`` pass. ``compact_index`` (dedup.compact_dedup_index +
 tombstone anti-join) runs BETWEEN refreshes, exactly like Iceberg
 OPTIMIZE.
 
@@ -62,7 +67,7 @@ import os
 import shutil
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks
@@ -71,6 +76,7 @@ from .functions.dedup import (build_dedup_index, compact_dedup_index,
 from .functions.snapshots import snapshot_diff
 
 _MARKER = "_refresh_complete.json"
+_STATUSES = ("added", "removed", "changed", "unchanged")
 
 
 def snapshot_fingerprints(pages: DataFrame) -> DataFrame:
@@ -111,14 +117,16 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
         old_fp = spark.read.parquet(fp_dir)
     else:
         old_fp = spark.createDataFrame([], "url string, fp string")
-    # materialize the diff before anything overwrites its inputs
-    diff = snapshot_diff(old_fp, new_fp, key="url") \
+    # materialize the diff before anything overwrites its inputs; the
+    # status counts ride on the same pass
+    diff_obs = Observation("refresh_diff")
+    diff = snapshot_diff(old_fp, new_fp, key="url").observe(
+        diff_obs, *[F.sum((F.col("status") == s).cast("long"))
+                    .alias(f"docs_{s}") for s in _STATUSES]) \
         .localCheckpoint(eager=True)
     counters: Dict = {"epoch": epoch}
-    for r in diff.groupBy("status").count().collect():
-        counters[f"docs_{r['status']}"] = int(r["count"])
-    for s in ("added", "removed", "changed", "unchanged"):
-        counters.setdefault(f"docs_{s}", 0)
+    counters.update(sinks.observed(
+        diff_obs, {f"docs_{s}": 0 for s in _STATUSES}))
 
     # 3. re-extract only what the diff routed (added + changed); the
     # epoch sink keeps run_extraction's own lineage + resume semantics
@@ -140,33 +148,39 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
     # exclude_self keeps a replayed epoch's decisions identical even
     # after its own index shard landed. A no-op epoch (nothing added or
     # changed) wrote no parquet part files — schema inference would
-    # fail, and there is nothing to dedup
+    # fail, and there is nothing to dedup. The fresh docs' signatures
+    # are built once: the probe reads them and the shard is their kept
+    # rows
     docs = _read_epoch_docs(spark, edir)
     index = _read_index(spark, state_dir)
-    dec = dedup_against_index(docs, index, exclude_self=True) \
+    sigs = build_dedup_index(docs).localCheckpoint(eager=True)
+    dec = dedup_against_index(docs, index, exclude_self=True,
+                              new_idx=sigs) \
         .withColumn("epoch", F.lit(epoch)) \
         .localCheckpoint(eager=True)
-    dec.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "decisions", f"e{epoch:06d}"))
-    kept = docs.join(dec.where("keep").select("doc_id"), "doc_id")
-    shard = build_dedup_index(kept).withColumn("epoch", F.lit(epoch)) \
-        .localCheckpoint(eager=True)
-    shard.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "index", f"e{epoch:06d}"))
-    agg = dec.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.col("exact_dup").cast("long")), F.lit(0))
-        .alias("x"),
-        F.coalesce(F.sum(F.col("near_dup").cast("long")), F.lit(0))
-        .alias("nd"),
-        F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0))
-        .alias("k")).first()
-    counters.update(dedup_docs=int(agg["n"]), dedup_exact=int(agg["x"]),
-                    dedup_near=int(agg["nd"]), dedup_kept=int(agg["k"]),
-                    index_rows_appended=shard.count())
+    dec_obs = Observation("refresh_dedup")
+    dec.observe(dec_obs, F.count(F.lit(1)).alias("dedup_docs"),
+                F.sum(F.col("exact_dup").cast("long")).alias("dedup_exact"),
+                F.sum(F.col("near_dup").cast("long")).alias("dedup_near"),
+                F.sum(F.col("keep").cast("long")).alias("dedup_kept")) \
+        .write.mode("overwrite").parquet(
+            os.path.join(state_dir, "decisions", f"e{epoch:06d}"))
+    counters.update(sinks.observed(dec_obs, dict.fromkeys(
+        ("dedup_docs", "dedup_exact", "dedup_near", "dedup_kept"), 0)))
+    shard = dec.where("keep").select("doc_id").join(sigs, "doc_id") \
+        .withColumn("epoch", F.lit(epoch))
+    shard_obs = Observation("refresh_shard")
+    shard.observe(shard_obs,
+                  F.count(F.lit(1)).alias("index_rows_appended")) \
+        .write.mode("overwrite").parquet(
+            os.path.join(state_dir, "index", f"e{epoch:06d}"))
+    counters.update(sinks.observed(shard_obs, {"index_rows_appended": 0}))
 
-    # 6. commit: fingerprints last-write-wins, then the marker
-    new_fp.write.mode("overwrite").parquet(fp_dir)
+    # 6. commit: fingerprints last-write-wins — the diff's new side, so
+    # the snapshot's html is hashed once — then the marker
+    fps = diff.where("status != 'removed'") \
+        .select("url", F.col("fp_new").alias("fp"))
+    fps.write.mode("overwrite").parquet(fp_dir)
     with open(os.path.join(edir, _MARKER), "w") as fh:
         json.dump(counters, fh)
     return counters
@@ -174,11 +188,12 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
 
 def _read_epoch_docs(spark: SparkSession, edir: str) -> DataFrame:
     """(doc_id, text) of one epoch's extraction output; empty frame for
-    a no-op epoch (an empty write leaves no part files to infer from)."""
+    a no-op epoch (an empty write leaves no part files to infer from).
+    Not materialized: the text is read once, into the epoch's
+    signatures, and the probe re-reads only the doc_id column."""
     try:
         return (spark.read.parquet(os.path.join(edir, "data"))
-                .select(F.col("url").alias("doc_id"), "text")
-                .localCheckpoint(eager=True))
+                .select(F.col("url").alias("doc_id"), "text"))
     except Exception:
         return spark.createDataFrame([], "doc_id string, text string")
 
@@ -252,9 +267,11 @@ def compact_index(spark: SparkSession, state_dir: str,
     drop rows for urls whose latest event is a removal, then
     dedup.compact_dedup_index (replay merge + superseded-revision
     collapse on the canonical-URL key + optional epoch TTL). Rewrites
-    the index as one compacted shard."""
-    index = _read_index(spark, state_dir)
-    before = index.count()
+    the index as one compacted shard; the row counts before and after
+    ride on the compaction's checkpoint and on its write."""
+    before = Observation("index_before")
+    index = _read_index(spark, state_dir).observe(
+        before, F.count(F.lit(1)).alias("index_rows_before"))
     tomb = (_tombstones(spark, state_dir)
             .groupBy("url").agg(F.max("rm_epoch").alias("rm_epoch")))
     live = (index.join(tomb, index["doc_id"] == tomb["url"], "left")
@@ -264,9 +281,10 @@ def compact_index(spark: SparkSession, state_dir: str,
     compacted = compact_dedup_index(
         live, url_keyed=True, order_col="epoch",
         ttl_min_order=ttl_min_epoch).localCheckpoint(eager=True)
-    after = compacted.count()
     root = os.path.join(state_dir, "index")
     shutil.rmtree(root, ignore_errors=True)
-    compacted.write.mode("overwrite").parquet(
-        os.path.join(root, "compacted"))
-    return {"index_rows_before": before, "index_rows_after": after}
+    after = Observation("index_after")
+    compacted.observe(after, F.count(F.lit(1)).alias("index_rows_after")) \
+        .write.mode("overwrite").parquet(os.path.join(root, "compacted"))
+    return {**sinks.observed(before, {"index_rows_before": 0}),
+            **sinks.observed(after, {"index_rows_after": 0})}

@@ -41,6 +41,19 @@ from pyspark.sql import functions as F
 from . import pipeline
 
 
+def observed(o: Observation, defaults: Dict) -> Dict:
+    """An Observation's counters as ints (NULL sums → 0). When the
+    observed plan held no rows (e.g. resume filtered the whole input),
+    AQE can collapse it to an empty relation and the CollectMetrics row
+    never materializes; Observation.get then fails JVM-side. Zero work
+    → zero counters: ``defaults``."""
+    try:
+        got = o.get
+    except Exception:
+        return dict(defaults)
+    return {k: (int(v) if v is not None else 0) for k, v in got.items()}
+
+
 # ---------------------------------------------------------------------------
 # Iceberg sink path (north_rule's named substrate)
 #
@@ -147,11 +160,7 @@ def run_extraction_iceberg(spark: SparkSession, pages: DataFrame,
     spark.sql(iceberg_merge_sql(table))
     metrics = {"batch_id": batch_id, "table": table,
                "wall_sec": round(time.time() - t0, 3)}
-    try:
-        metrics.update({k: int(v) if v is not None else 0
-                        for k, v in obs.get.items()})
-    except Exception:
-        metrics.update({"docs_in": 0, "bytes_in": 0})
+    metrics.update(observed(obs, {"docs_in": 0, "bytes_in": 0}))
     return metrics
 
 
@@ -262,19 +271,9 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
     out.write.mode("append").parquet(data_dir)
     wall = time.time() - t0
 
-    def _observed(o: Observation, defaults: Dict) -> Dict:
-        # When resume filters the whole input, AQE can collapse the plan to
-        # an empty relation and the CollectMetrics row never materializes;
-        # Observation.get then fails JVM-side. Zero work → zero counters.
-        try:
-            got = o.get
-        except Exception:
-            return dict(defaults)
-        return {k: (int(v) if v is not None else 0) for k, v in got.items()}
-
     metrics = {"batch_id": batch_id, "wall_sec": round(wall, 3)}
-    metrics.update(_observed(obs, {"docs_in": 0, "bytes_in": 0}))
-    metrics.update(_observed(out_obs, {
+    metrics.update(observed(obs, {"docs_in": 0, "bytes_in": 0}))
+    metrics.update(observed(out_obs, {
         "docs_out": 0, "n_partitions": 0, "nodes_classified": 0,
         "bytes_text_out": 0, "docs_mismatched": 0, "docs_failed": 0,
         "docs_parse_fast": 0, "docs_parse_fallback": 0,

@@ -108,12 +108,15 @@ def run_incremental_dedup(spark: SparkSession, landing_dir: str,
         except Exception:  # first epoch: no index yet
             index = s.createDataFrame(
                 [], "doc_id string, norm_md5 string, sig array<string>")
-        dec = dedup_against_index(docs, index, exclude_self=True) \
-            .localCheckpoint(eager=True)
+        # signatures built once: the probe reads them, the kept ones
+        # are the epoch's index rows
+        sigs = build_dedup_index(docs).localCheckpoint(eager=True)
+        dec = dedup_against_index(docs, index, exclude_self=True,
+                                  new_idx=sigs).localCheckpoint(eager=True)
         (dec.withColumn("epoch", F.lit(epoch_id))
             .write.mode("append").parquet(decisions_dir + "/data"))
-        kept = docs.join(dec.where("keep").select("doc_id"), "doc_id")
-        build_dedup_index(kept).write.mode("append").parquet(index_dir)
+        (dec.where("keep").select("doc_id").join(sigs, "doc_id")
+            .write.mode("append").parquet(index_dir))
 
     q = (stream_pages(spark, landing_dir).writeStream
          .foreachBatch(_epoch)

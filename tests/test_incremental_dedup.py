@@ -100,6 +100,29 @@ def test_exclude_self_replay_idempotence(spark):
     assert got[12]["exact_dup"] and not got[12]["keep"]
 
 
+@pytest.mark.parametrize("exclude_self", [False, True])
+def test_precomputed_new_idx_equals_default(spark, index, exclude_self):
+    """A caller that builds the batch's signature rows once and passes
+    them as ``new_idx`` gets the same decisions as the default call —
+    with and without exclude_self, empty and NULL text included."""
+    new = spark.createDataFrame([
+        (1, "  " + T1.upper() + " "),                          # exact
+        (2, T2.replace("alpha", "ALPHA2").replace("pi", "pie")),  # near
+        (3, "completely unrelated content about shuffle partitions"),
+        (4, ""),
+        (5, None),
+        (100, T1),                     # its own row is in the index
+    ], "doc_id long, text string")
+    want = sorted(tuple(r) for r in dedup_against_index(
+        new, index, exclude_self=exclude_self).collect())
+    sigs = build_dedup_index(new).localCheckpoint(eager=True)
+    got = sorted(tuple(r) for r in dedup_against_index(
+        new, index, exclude_self=exclude_self, new_idx=sigs).collect())
+    assert got == want
+    dropped = {r[0] for r in got if not r[-1]}
+    assert dropped == ({1, 2} if exclude_self else {1, 2, 100})
+
+
 def test_keep_best_quality_survivor(spark):
     """dedup_decision_frame(quality=...): the cluster survivor is the
     highest-scored doc, not the min doc_id; unscored clusters fall back

@@ -225,3 +225,60 @@ def test_compaction_scrubs_removed_and_preserves_decisions(
         .select(F.concat("url", F.lit("?clone=2")).alias("doc_id"), "text")
     dec = dedup_against_index(clone_docs, idx).collect()[0]
     assert dec["exact_dup"] is True and dec["keep"] is False
+
+
+def _sql_actions(spark, after: int) -> list:
+    """(execution id, action) of every SQL execution newer than
+    ``after``, read off the SQL status store; the action is the head of
+    the execution's ``'<action> at <call site>'`` description."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = (spark._jsparkSession.sharedState().statusStore()
+          .executionsList().iterator())
+    out = []
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > after:
+            out.append((e.executionId(), e.description().split(" at ")[0]))
+    return out
+
+
+def test_epoch_counts_through_observe_and_writes_once(spark, state,
+                                                      epoch4_clone):
+    """One epoch triggers no collect/first/count — every counter rides
+    on a checkpoint or a write through observe — and the tables it
+    derives from what it computed once are what recomputing gives: the
+    fingerprint table is the snapshot's own, the index shard is the
+    kept docs' signature rows."""
+    from ocr_module_spark.functions.dedup import build_dedup_index
+    from ocr_module_spark.refresh import snapshot_fingerprints
+    pages = _snap1(spark)      # back to v1: re-adds, reverts, removes
+    seen = max([i for i, _ in _sql_actions(spark, -1)], default=-1)
+    c = refresh(spark, pages, state)
+    actions = [a for _, a in _sql_actions(spark, seen)]
+    assert "parquet" in actions and "localCheckpoint" in actions
+    assert not {"collect", "first", "count"} & set(actions), actions
+    # v4 -> v1: the 10 added urls and the clone leave, the two urls
+    # removed in v2 and never re-added come back, the revisions revert
+    assert (c["docs_added"], c["docs_removed"], c["docs_changed"],
+            c["docs_unchanged"]) == (REMOVED - 1, N2 - N1 + 1, CHANGED,
+                                     N1 - (REMOVED - 1) - CHANGED)
+    assert c["dedup_docs"] == c["extract_docs_in"] == REMOVED - 1 + CHANGED
+
+    fp = spark.read.parquet(os.path.join(state, "fingerprints"))
+    assert set(map(tuple, fp.collect())) \
+        == set(map(tuple, snapshot_fingerprints(pages).collect()))
+
+    ep = f"e{c['epoch']:06d}"
+    docs = (spark.read.parquet(os.path.join(state, "epochs", ep, "data"))
+            .select(F.col("url").alias("doc_id"), "text"))
+    dec = spark.read.parquet(os.path.join(state, "decisions", ep))
+    assert dec.where("keep").count() == c["dedup_kept"]
+    kept = docs.join(dec.where("keep").select("doc_id"), "doc_id")
+
+    def sig_rows(df):
+        return {(r["doc_id"], r["norm_md5"], tuple(r["sig"]))
+                for r in df.collect()}
+    shard = spark.read.parquet(os.path.join(state, "index", ep))
+    assert {r["epoch"] for r in shard.collect()} <= {c["epoch"]}
+    assert sig_rows(shard) == sig_rows(build_dedup_index(kept))
+    assert shard.count() == c["index_rows_appended"]
