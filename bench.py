@@ -11,9 +11,9 @@ executes (every column computed, nothing collected to the driver) — the
 same way a cluster job would be bound by the sink, not by driver transfer.
 
 The flagship extraction is also reported as docs/sec (``extract_docs_sec``)
-since that is the north-star metric. For the two-cluster-size scaling
-criterion run ``python tools/scaling_bench.py`` which invokes this script
-at two parallelism levels in separate JVMs and computes the efficiency.
+since that is the north-star metric. The old two-cluster-size scaling
+driver (steal/bandwidth-gated, 32-core VM) is kept in history only:
+``git show c8b74f0:tools/scaling_bench.py``.
 """
 
 from __future__ import annotations
@@ -59,28 +59,6 @@ HEADLINE2 = [
 ]
 
 
-def _steal_sec() -> float:
-    """Cumulative hypervisor steal time (shared with tools/scaling_bench)."""
-    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent / "tools"))
-    import scaling_bench
-    return scaling_bench._steal_sec()
-
-
-def _bw_probe_gbs() -> float:
-    """256 MB memory-bandwidth probe (shared with tools/scaling_bench)."""
-    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent / "tools"))
-    import scaling_bench
-    return scaling_bench._bw_probe_gbs()
-
-
-def _bw_probe_mt_gbs() -> float:
-    """Aggregate (8-thread) bandwidth probe — catches neighbors the
-    single-thread probe can't see (shared with tools/scaling_bench)."""
-    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent / "tools"))
-    import scaling_bench
-    return scaling_bench._bw_probe_mt_gbs()
-
-
 def _materialize(df) -> None:
     """Execute the full plan without driver collection.
 
@@ -111,19 +89,7 @@ def main() -> int:
         extra["spark.local.dir"] = "/dev/shm/spark-local"
     spark = get_spark("bench", cores=cpus, shuffle_partitions=cpus,
                       extra_conf=extra)
-    qs = dict(entry_mod.queries())
-    # demo queries trimmed from the 50-entry driver registry but kept in
-    # the headline suite for cross-round comparability
-    from ocr_module_spark.functions.dedup import (q_dedup_incremental,
-                                                  q_dedup_minhash)
-    from ocr_module_spark.functions.model_score import q_model_score
-    from ocr_module_spark.functions.packing import q_pack_materialize
-    from ocr_module_spark.functions.simsearch import q_knn_brute_cosine
-    qs.setdefault("dedup_minhash_signatures", q_dedup_minhash)
-    qs.setdefault("knn_brute_cosine", q_knn_brute_cosine)
-    qs.setdefault("curate_pack_materialize", q_pack_materialize)
-    qs.setdefault("dedup_incremental", q_dedup_incremental)
-    qs.setdefault("text_model_score", q_model_score)
+    qs = {name: fn for name, (fn, _sql) in entry_mod.catalog().items()}
 
     # warm up the JVM + Python worker pool so the first timed query doesn't
     # pay one-time startup (exactly what a long-running cluster job amortizes)
@@ -135,8 +101,6 @@ def main() -> int:
     # let a single multi-second load storm poison every measurement,
     # while round-interleaving spaces a query's reps ~a suite apart so
     # the min survives any storm shorter than a full round
-    steal0 = _steal_sec()
-    bw_start, mt_start = _bw_probe_gbs(), _bw_probe_mt_gbs()
     times: dict[str, float] = {name: float("inf") for name in HEADLINE}
     for _round in range(3):
         for name in HEADLINE:
@@ -182,7 +146,7 @@ def main() -> int:
     # sustained extraction (the north-star number): the sf-dir flagship
     # run above is startup-dominated (16k docs ≈ 1 s of work next to
     # plan/codegen cost); this one is big enough to amortize task waves.
-    # Input parquet cached on tmpfs across runs, scaling_bench-style.
+    # Input parquet cached on tmpfs across runs.
     sus_docs = int(os.environ.get("SPARK_GRAFT_SUSTAINED_DOCS", "200000"))
     sus_rate = None
     if os.path.isdir("/dev/shm") and sus_docs > 0:
@@ -206,7 +170,6 @@ def main() -> int:
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
 
-    bw_end, mt_end = _bw_probe_gbs(), _bw_probe_mt_gbs()
     n_docs = _n_docs(sf_dir)
     extract_docs_sec = round(n_docs / times["extract_text"], 1)
     total = round(sum(times.values()), 3)
@@ -225,20 +188,9 @@ def main() -> int:
         "extract_docs_sec": extract_docs_sec,
         "extract_sustained_docs": sus_docs,
         "extract_sustained_docs_sec": sus_rate,
-        # host contamination markers: this VM has noisy neighbors (load
-        # observed up to 4.0 with zero local processes; such windows
-        # inflate the suite ~3x). The steal counter catches vCPU
-        # preemption; the bracketing 256 MB copy probes catch a neighbor
-        # saturating the socket's memory controllers (clean windows read
-        # 7.8-8.0 GB/s on this VM, contended ones 4-6 — BENCH.md §-1).
-        # Compare against BENCH.md's drift band with these in hand.
+        # host contamination marker: a shared host's load inflates
+        # every timing above; compare runs with this in hand
         "host_load_avg_1m": round(os.getloadavg()[0], 2),
-        "host_steal_cpusec": round(_steal_sec() - steal0, 1),
-        "host_bw_gbs": [round(bw_start, 1), round(bw_end, 1)],
-        # 8-thread AGGREGATE bandwidth: a neighbor can eat the socket's
-        # total bandwidth while one thread still reads clean (observed:
-        # suite 12.2s with st probes 5.9-7.0 but zero steal)
-        "host_bw_mt_gbs": [round(mt_start, 1), round(mt_end, 1)],
     }
     spark.stop()
     print(json.dumps(out))

@@ -4,49 +4,5 @@ Each module exposes ``REGISTRY: dict[name -> (spark_fn, oracle_sql|None)]``
 where ``spark_fn(spark, sf_dir) -> DataFrame`` and ``oracle_sql`` is the
 equivalent ANSI SQL DuckDB runs on the same parquet tables. Column names and
 rounding are aligned on both sides so the driver's order-insensitive
-value-hash comparison is exact.
+value-hash comparison is exact. ``__spark_entry__.catalog()`` merges them.
 """
-
-from __future__ import annotations
-
-from . import (datacard, decontam, dedup, dsir, hostrep, langid, multimodal,
-               ngramlm, packing, simsearch, snapshots, textstats, urls)
-
-
-def registry():
-    out = {}
-    for mod in (textstats, dedup, simsearch, multimodal, decontam):
-        out.update(mod.REGISTRY)
-    # round-4 window rotation: the packing plan and url canonicalization
-    # take the two slots freed in operators/relational.py (the registry
-    # is pinned at exactly 50 so the driver's check window covers 100%).
-    # Their sibling entries (salted packing, materialize, latest-
-    # revision, model score) stay on the out-of-window gates
-    # (tools/parity_check.py + tests/test_hostile_parity.py).
-    out["curate_pack_sequences"] = packing.REGISTRY["curate_pack_sequences"]
-    out["fn_url_canonicalize"] = urls.REGISTRY["fn_url_canonicalize"]
-    # second r4 rotation: DSIR selection takes the slot of
-    # dedup_jaccard_pairs — the jaccard-verify stage stays fully gated
-    # out-of-window (hostile parity + parity_check) and its family keeps
-    # two in-window rows (dedup_ngram_jaccard, the keep-list chain).
-    del out["dedup_jaccard_pairs"]
-    out["text_dsir_select"] = dsir.REGISTRY["text_dsir_select"]
-    # round-5 window rotation (VERDICT r4 ask #1): the r4 flagships take
-    # the slots of five subsumed demo rows. Displaced (all keep the
-    # identical DuckDB value gate via tests/test_hostile_parity.py +
-    # tools/parity_check.py, and the first two are ALSO column-folded
-    # into driver-green rows on the same scans — see
-    # operators/relational.py REGISTRY comment):
-    #   agg_content_length, json_pointer_extract, join_positional_zip
-    #   (removed in operators/relational.py), plus mm_frame_sample
-    #   (subsumed by mm_features' folded metadata/resize columns) and
-    #   text_rolling_fingerprint (the fingerprint family keeps
-    #   text_fingerprint + the rolling variant on the hostile gate).
-    del out["mm_frame_sample"]
-    del out["text_rolling_fingerprint"]
-    out["text_lm_perplexity"] = ngramlm.REGISTRY["text_lm_perplexity"]
-    out["text_langid_eval"] = langid.REGISTRY["text_langid_eval"]
-    out["host_reputation"] = hostrep.REGISTRY["host_reputation"]
-    out["snapshot_diff"] = snapshots.REGISTRY["snapshot_diff"]
-    out["text_datacard"] = datacard.REGISTRY["text_datacard"]
-    return out

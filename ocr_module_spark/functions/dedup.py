@@ -869,8 +869,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-engine-checkable demo of the incremental operator pair:
     index the even-doc_id half of the corpus, dedup the odd half
     against it (the synthetic corpus is near-dup-rich, so both flag
-    kinds fire). Not a registry row (the driver window is full at 50);
-    parity-checked on the hostile gate instead."""
+    kinds fire). Outside the driver window; parity-checked by
+    tools/parity_check.py and the hostile gate."""
     d = _docs(spark, sf_dir)
     index = build_dedup_index(d.where("doc_id % 2 = 0"))
     return dedup_against_index(
@@ -1088,15 +1088,11 @@ FROM dn LEFT JOIN per_doc p ON dn.doc_id = p.doc_id
 """
 
 
-# dedup_keep_list is registered by decontam.py (the keep-list the driver
-# checks is the full curation decision: dedup AND NOT contaminated).
-# dedup_minhash_signatures / dedup_lsh_buckets keep their queries for
-# tests/bench but are no longer separate driver rows: the signature →
-# banding → candidate chain is driver-checked end-to-end through
-# dedup_jaccard_pairs, dedup_cc_clusters and the keep-list (all of which
-# consume _stacked_signatures), and the registry must fit the driver's
-# 50-row check window so every operator gets a driver-green row.
+# dedup_keep_list is registered by decontam.py (the keep-list is the
+# full curation decision: dedup AND NOT contaminated).
 REGISTRY = {
+    "dedup_minhash_signatures": (q_dedup_minhash, SQL_DEDUP_MINHASH),
+    "dedup_lsh_buckets": (q_dedup_lsh_buckets, SQL_DEDUP_LSH_BUCKETS),
     "dedup_cc_clusters": (q_dedup_cc_clusters, SQL_DEDUP_CC_CLUSTERS),
     "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
     "dedup_spans": (q_dedup_spans, SQL_DEDUP_SPANS),
@@ -1105,4 +1101,5 @@ REGISTRY = {
                                SQL_DEDUP_EMBEDDING_COSINE),
     "dedup_jaccard_pairs": (q_dedup_jaccard_pairs, SQL_DEDUP_JACCARD_PAIRS),
     "dedup_simhash": (q_dedup_simhash, SQL_DEDUP_SIMHASH),
+    "dedup_incremental": (q_dedup_incremental, SQL_DEDUP_INCREMENTAL),
 }

@@ -379,6 +379,9 @@ def q_dedup_exactsubstr(spark, sf_dir: str) -> DataFrame:
     return exact_substr_frame(docs.select("doc_id", "text"))
 
 
+REGISTRY = {"dedup_exactsubstr": (q_dedup_exactsubstr, None)}
+
+
 # ---------------------------------------------------------------------------
 # pure-Python reference twin (mirrors every stage; tests pin equality)
 

@@ -336,8 +336,8 @@ def q_link_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source of doc i endorses source of doc (7i+3) mod N — the even/odd
     device of q_dedup_incremental, giving both engines the same
     multi-component host graph with skewed degrees), then the exact
-    production power iteration. Not a registry row (the driver window
-    is full at 50); parity-checked on the hostile gate instead."""
+    production power iteration. Outside the driver window;
+    parity-checked by tools/parity_check.py and the hostile gate."""
     from .textstats import _docs
     d = _docs(spark, sf_dir).select("doc_id", "source") \
         .where(F.col("source").isNotNull())

@@ -341,8 +341,7 @@ def media_features(df: DataFrame, payload_col: str = "payload",
 
 def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The combined media pipeline row (one driver entry pinning three
-    ops over the same payload — the registry must fit the driver's
-    50-row check window, and these share grain + ascii filter):
+    ops over the same payload, which share grain + ascii filter):
 
     * metadata (size/checksum/mime sniff) — JVM columns at scan speed;
     * Arrow-batched feature extraction — first two fake features are
@@ -441,11 +440,8 @@ FROM a d LEFT JOIN m ON d.doc_id = m.doc_id
 """
 
 
-# mm_metadata and mm_resize are folded into the q_mm_features driver row
-# (same per-doc grain and ascii filter; the registry must fit the
-# driver's 50-row check window) — their operator functions remain the
-# tested building blocks.
 REGISTRY = {
+    "mm_metadata": (q_mm_metadata, SQL_MM_METADATA),
     "mm_frame_sample": (q_mm_frame_sample, SQL_MM_FRAME_SAMPLE),
     "mm_features": (q_mm_features, SQL_MM_FEATURES),
 }

@@ -583,6 +583,7 @@ REGISTRY = {
     "curate_pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
     "curate_pack_salted": (q_pack_sequences_salted,
                            SQL_PACK_SEQUENCES_SALTED),
+    "curate_pack_materialize": (q_pack_materialize, SQL_PACK_MATERIALIZE),
     "curate_shards": (q_curate_shards, SQL_CURATE_SHARDS),
     "curate_shards_salted": (q_curate_shards_salted,
                              SQL_CURATE_SHARDS_SALTED),

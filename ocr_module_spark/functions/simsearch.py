@@ -492,14 +492,10 @@ FROM truth t JOIN approx a USING (query_id, vec_id)
 SQL_ANN_RECALL_EVAL = _sql_recall_eval()
 
 
-# knn_brute_cosine / ann_sign_buckets / ann_bucketed_knn keep their demo
-# queries for tests and bench, but are no longer separate driver rows:
-# the single-query demos are strictly subsumed by the batch-query shapes
-# (decontam.q_decon_embedding_knn joins a query SET on the same bucket
-# keys; q_ann_recall_eval drives brute + bucketed over the sampled probe
-# set), and the registry must fit the driver's 50-row check window so
-# every operator gets a driver-green correctness row.
 REGISTRY = {
+    "knn_brute_cosine": (q_knn_brute_cosine, SQL_KNN_BRUTE_COSINE),
+    "ann_sign_buckets": (q_ann_sign_buckets, SQL_ANN_SIGN_BUCKETS),
+    "ann_bucketed_knn": (q_ann_bucketed_knn, SQL_ANN_BUCKETED_KNN),
     "ann_recall_eval": (q_ann_recall_eval, SQL_ANN_RECALL_EVAL),
     "ann_ivf_probe": (q_ann_ivf_probe, SQL_ANN_IVF_PROBE),
 }

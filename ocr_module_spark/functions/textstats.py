@@ -937,28 +937,20 @@ FROM raw
 """
 
 
-# text_token_count, text_quality_filter, text_fingerprint and
-# sample_stratified_hash are folded into text_bpe_token_estimate
-# (n_ws_tokens), text_quality_score (drop_reasons/keep),
-# text_rolling_fingerprint (norm_md5/len_band) and text_quality_tiers
-# (n_sampled/first/last_sampled) respectively — same grain, one scan
-# each; the registry must fit the driver's 50-row check window. The
-# standalone operator functions remain (hostile-corpus parity still
-# drives them directly).
 REGISTRY = {
+    "text_token_count": (q_token_count, SQL_TOKEN_COUNT),
     "text_quality_tiers": (q_quality_tiers, SQL_QUALITY_TIERS),
     "text_vocab_topk": (q_vocab_topk, SQL_VOCAB_TOPK),
     "text_repetition": (q_repetition, SQL_REPETITION),
-    # text_bpe_token_estimate: the per-doc BPE estimate is driver-checked
-    # as text_quality_score.n_bpe_tokens (same scan); the standalone
-    # query + oracle stay on the hostile-parity gate, freeing the 50-row
-    # registry slot for curate_budget_mix.
+    "text_bpe_token_estimate": (q_bpe_token_estimate,
+                                SQL_BPE_TOKEN_ESTIMATE),
     "curate_budget_mix": (q_budget_mix, SQL_BUDGET_MIX),
+    "text_fingerprint": (q_fingerprint, SQL_FINGERPRINT),
     "text_rolling_fingerprint": (q_rolling_fingerprint,
                                  SQL_ROLLING_FINGERPRINT),
     "text_quality_score": (q_quality_score, SQL_QUALITY_SCORE),
-    # text_lang_guess: the per-doc guess is driver-checked as
-    # text_quality_score.guessed_lang (same scan); the lang-vs-guess
-    # accuracy rollup keeps its query + oracle for the hostile-parity
-    # gate and bench, freeing a 50-row registry slot for dedup_spans.
+    "text_quality_filter": (q_quality_filter, SQL_QUALITY_FILTER),
+    "text_lang_guess": (q_lang_guess, SQL_LANG_GUESS),
+    "sample_stratified_hash": (q_sample_stratified_hash,
+                               SQL_SAMPLE_STRATIFIED_HASH),
 }

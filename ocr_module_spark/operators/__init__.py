@@ -1,11 +1,2 @@
-from __future__ import annotations
-
-from . import enrichment, extraction, relational
-
-
-def registry():
-    out = {}
-    out.update(relational.REGISTRY)
-    out.update(enrichment.REGISTRY)
-    out.update(extraction.REGISTRY)
-    return out
+"""Relational, enrichment and extraction operators; each module's ``REGISTRY``
+feeds ``__spark_entry__.catalog()``."""

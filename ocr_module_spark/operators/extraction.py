@@ -169,10 +169,10 @@ def q_region_pixel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-feature vector (multimodal.decode_features — dims, page,
     per-channel means). Proves the media seam end-to-end with real
     image bytes: encode → container → decode → pixels → features, all
-    inside ONE Arrow stage with zero extra I/O and zero shuffles. Not a
-    driver registry row (PNG decode has no SQL form; the registry holds
-    the 50-row driver window) — gated by tests/test_region_features.py
-    recomputing rows through the pure-Python reference path."""
+    inside ONE Arrow stage with zero extra I/O and zero shuffles. No SQL
+    twin (PNG decode has no SQL form) — gated by
+    tests/test_region_features.py recomputing rows through the
+    pure-Python reference path."""
     import pandas as pd
 
     from ..deploy import ensure_pyfiles
@@ -235,4 +235,5 @@ REGISTRY = {
     "extract_regions": (q_extract_regions, _golden_sql(
         "extract_regions",
         "url, page_number, block_no, region_sha256, region_len")),
+    "region_pixel_features": (q_region_pixel_features, None),
 }

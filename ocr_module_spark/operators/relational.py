@@ -686,9 +686,7 @@ def q_regex_extract_rewrite(spark, sf_dir):
         "regexp_extract_all(content, '<formula_(\\\\d+)/>', 1), "
         "i -> md5(cast(i as binary))), '|')")
     # F1 substring-occurrence counting folded into the same documents
-    # scan (the former fn_token_split_count driver row — rotated out of
-    # the 50-row window in round 4; its standalone form stays on the
-    # hostile/parity gates)
+    # scan (fn_token_split_count's count, also registered on its own)
     n_occ = F.size(F.split(F.col("text"), "the", -1)) - 1
     return d.select("doc_id", F.size(ids).alias("n_tags"),
                     subst.alias("payloads_in_order"),
@@ -715,14 +713,10 @@ FROM d
 REGISTRY = {
     "agg_pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
     "agg_usage_stats": (q_usage_stats, SQL_USAGE_STATS),
-    # agg_content_length / json_pointer_extract / join_positional_zip
-    # rotated OUT of the 50-row driver window in round 5 (slots taken by
-    # the r4 flagships: lm_perplexity, langid_eval, host_reputation,
-    # snapshot_diff, datacard). All three stay fully oracled on the
-    # hostile gate (tests/test_hostile_parity.py) + tools/parity_check.py,
-    # and their §2 semantics are ALSO folded into driver-green rows on
-    # the same scans: avg_k/max_k into agg_usage_stats (F11/J8),
-    # content_length into agg_mismatch_audit (A3).
+    "agg_content_length": (q_content_length, SQL_CONTENT_LENGTH),
+    "json_pointer_extract": (q_json_pointer_extract,
+                             SQL_JSON_POINTER_EXTRACT),
+    "join_positional_zip": (q_positional_zip_join, SQL_POSITIONAL_ZIP_JOIN),
     "agg_batch_prompt_assembly": (q_batch_prompt_assembly,
                                   SQL_BATCH_PROMPT_ASSEMBLY),
     "join_pointer_membership": (q_pointer_membership_join,
@@ -737,14 +731,9 @@ REGISTRY = {
     "window_greedy_chunking": (q_greedy_chunking, SQL_GREEDY_CHUNKING),
     "proj_orientation_normalize": (q_orientation_normalize,
                                    SQL_ORIENTATION_NORMALIZE),
-    # proj_bbox_reduction_units and fn_token_split_count rotated OUT of
-    # the 50-row driver window in round 4 (the window is capped; the
-    # newest operators — sequence packing, url canonicalization — take
-    # their slots). Both stay fully oracled: the hostile gate
-    # (tests/test_hostile_parity.py) and tools/parity_check.py run the
-    # identical DuckDB value check, and fn_token_split_count's counting
-    # column is ALSO folded into the driver-green
-    # fn_regex_extract_rewrite row (same documents scan).
+    "proj_bbox_reduction_units": (q_bbox_reduction_units,
+                                  SQL_BBOX_REDUCTION_UNITS),
+    "fn_token_split_count": (q_token_split_count, SQL_TOKEN_SPLIT_COUNT),
     "agg_mismatch_audit": (q_mismatch_audit, SQL_MISMATCH_AUDIT),
     "agg_salted_skew": (q_salted_skew_agg, SQL_SALTED_SKEW_AGG),
     "join_range_containment": (q_range_containment_join,

@@ -188,26 +188,18 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
 
 def _read_epoch_docs(spark: SparkSession, edir: str) -> DataFrame:
     """(doc_id, text) of one epoch's extraction output; empty frame for
-    a no-op epoch (an empty write leaves no part files to infer from).
-    Not materialized: the text is read once, into the epoch's
-    signatures, and the probe re-reads only the doc_id column."""
-    try:
-        return (spark.read.parquet(os.path.join(edir, "data"))
-                .select(F.col("url").alias("doc_id"), "text"))
-    except Exception:
-        return spark.createDataFrame([], "doc_id string, text string")
+    a no-op epoch. Not materialized: the text is read once, into the
+    epoch's signatures, and the probe re-reads only the doc_id column."""
+    return (sinks.read_parquet_or_empty(
+        spark, os.path.join(edir, "data"), "url string, text string")
+        .select(F.col("url").alias("doc_id"), "text"))
 
 
 def _read_index(spark: SparkSession, state_dir: str) -> DataFrame:
-    root = os.path.join(state_dir, "index")
-    empty = "doc_id string, norm_md5 string, sig array<string>, epoch int"
-    if not os.path.isdir(root) or not os.listdir(root):
-        return spark.createDataFrame([], empty)
-    try:
-        return (spark.read.option("recursiveFileLookup", "true")
-                .parquet(root))
-    except Exception:      # every shard so far was a no-op epoch's
-        return spark.createDataFrame([], empty)
+    return sinks.read_parquet_or_empty(
+        spark, os.path.join(state_dir, "index"),
+        "doc_id string, norm_md5 string, sig array<string>, epoch int",
+        recursive=True)
 
 
 def _tombstones(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -236,11 +228,10 @@ def refresh_corpus(spark: SparkSession, state_dir: str) -> DataFrame:
     for d in _epoch_dirs(state_dir):
         marker = os.path.join(state_dir, "epochs", d, _MARKER)
         data = os.path.join(state_dir, "epochs", d, "data")
-        if not (os.path.exists(marker) and os.path.isdir(data)):
+        if not os.path.exists(marker):
             continue
-        try:
-            df = spark.read.parquet(data)   # no-op epoch: no part files
-        except Exception:
+        df = sinks.read_parquet_or_empty(spark, data, None)
+        if df is None:                      # no-op epoch: no part files
             continue
         frames.append(df.withColumn("epoch", F.lit(int(d[1:]))))
     if not frames:

@@ -29,6 +29,7 @@ first-class:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -52,6 +53,26 @@ def observed(o: Observation, defaults: Dict) -> Dict:
     except Exception:
         return dict(defaults)
     return {k: (int(v) if v is not None else 0) for k, v in got.items()}
+
+
+def read_parquet_or_empty(spark: SparkSession, path: str,
+                          empty_schema: Optional[str],
+                          recursive: bool = False) -> Optional[DataFrame]:
+    """``path``'s parquet data. Only when ``path`` holds no ``*.parquet``
+    data file (a no-op write leaves none to infer a schema from) is the
+    answer an empty ``empty_schema`` frame, or None without a schema.
+    Any other read failure — a corrupt part file — propagates: an
+    unreadable shard must never pass for an empty one."""
+    pattern = (os.path.join(path, "**", "*.parquet") if recursive
+               else os.path.join(path, "*.parquet"))
+    if not glob.glob(pattern, recursive=recursive):
+        if empty_schema is None:
+            return None
+        return spark.createDataFrame([], empty_schema)
+    reader = spark.read
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    return reader.parquet(path)
 
 
 # ---------------------------------------------------------------------------

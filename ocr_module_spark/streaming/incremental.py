@@ -103,11 +103,8 @@ def run_incremental_dedup(spark: SparkSession, landing_dir: str,
         s = batch_df.sparkSession
         docs = (batch_df.select(F.col("url").alias("doc_id"), "text")
                 .localCheckpoint(eager=True))
-        try:
-            index = s.read.parquet(index_dir)
-        except Exception:  # first epoch: no index yet
-            index = s.createDataFrame(
-                [], "doc_id string, norm_md5 string, sig array<string>")
+        index = sinks.read_parquet_or_empty(   # first epoch: no index yet
+            s, index_dir, "doc_id string, norm_md5 string, sig array<string>")
         # signatures built once: the probe reads them, the kept ones
         # are the epoch's index rows
         sigs = build_dedup_index(docs).localCheckpoint(eager=True)

@@ -70,10 +70,7 @@ DOC_QUERIES = [
     "host_link_centrality",
     "host_anchor_texts",
     "snapshot_diff",
-    # rotated out of the driver window in round 4 (slots taken by
-    # curate_pack_sequences / fn_url_canonicalize) — identical value
-    # gate here; proj_bbox runs on the hostile dir's verbatim-copied
-    # part table
+    # runs on the hostile dir's verbatim-copied part table
     "proj_bbox_reduction_units",
     "dedup_exact",
     "dedup_jaccard_pairs",
@@ -109,118 +106,6 @@ DOC_QUERIES = [
 ]
 
 
-def _extra_queries():
-    """Demo queries trimmed from the driver registry (subsumed by their
-    batch/merged successors) but still part of the hostile-corpus parity
-    surface — resolved straight from the module REGISTRY constants."""
-    from ocr_module_spark.functions import (badwords, dedup,
-                                            dsir, embed,
-                                            linededup,
-                                            linkgraph, mixture,
-                                            model_score, multimodal,
-                                            packing, simsearch,
-                                            splits, textnorm,
-                                            textstats, urls)
-    from ocr_module_spark.functions import datacard
-    from ocr_module_spark.operators import relational
-    return {
-        # curate_pack_sequences / fn_url_canonicalize rotated INTO the
-        # driver window in round 4; these two left it (value gate
-        # unchanged, just resolved here instead of via queries())
-        "proj_bbox_reduction_units": (relational.q_bbox_reduction_units,
-                                      relational.SQL_BBOX_REDUCTION_UNITS),
-        "fn_token_split_count": (relational.q_token_split_count,
-                                 relational.SQL_TOKEN_SPLIT_COUNT),
-        # rotated OUT of the driver window in round 5 (slots taken by the
-        # r4 flagships lm_perplexity / langid_eval / host_reputation /
-        # snapshot_diff / datacard, which now resolve via queries());
-        # identical value gate here, and agg_content_length /
-        # json_pointer_extract are ALSO column-folded into the
-        # driver-green agg_mismatch_audit / agg_usage_stats rows
-        "agg_content_length": (relational.q_content_length,
-                               relational.SQL_CONTENT_LENGTH),
-        "json_pointer_extract": (relational.q_json_pointer_extract,
-                                 relational.SQL_JSON_POINTER_EXTRACT),
-        "join_positional_zip": (relational.q_positional_zip_join,
-                                relational.SQL_POSITIONAL_ZIP_JOIN),
-        "mm_frame_sample": (multimodal.q_mm_frame_sample,
-                            multimodal.SQL_MM_FRAME_SAMPLE),
-        "text_rolling_fingerprint": (textstats.q_rolling_fingerprint,
-                                     textstats.SQL_ROLLING_FINGERPRINT),
-        "curate_pack_materialize": (packing.q_pack_materialize,
-                                    packing.SQL_PACK_MATERIALIZE),
-        "curate_pack_salted": (packing.q_pack_sequences_salted,
-                               packing.SQL_PACK_SEQUENCES_SALTED),
-        "curate_shards": (packing.q_curate_shards,
-                          packing.SQL_CURATE_SHARDS),
-        "curate_shards_salted": (packing.q_curate_shards_salted,
-                                 packing.SQL_CURATE_SHARDS_SALTED),
-        "curate_split": (splits.q_split_rollup,
-                         splits.SQL_SPLIT_ROLLUP),
-        "curate_split_leakage": (splits.q_split_leakage_audit,
-                                 splits.SQL_SPLIT_LEAKAGE_AUDIT),
-        "curate_split_repair": (splits.q_split_repair,
-                                splits.SQL_SPLIT_REPAIR),
-        "curate_mixture_epochs": (mixture.q_mixture_epochs,
-                                  mixture.SQL_MIXTURE_EPOCHS),
-        "fn_url_latest_revision": (urls.q_url_latest_revision,
-                                   urls.SQL_URL_LATEST_REVISION),
-        "text_model_score": (model_score.q_model_score,
-                             model_score.SQL_MODEL_SCORE),
-        "text_model_auc": (model_score.q_model_auc,
-                           model_score.SQL_MODEL_AUC),
-        "text_model_auc_holdout": (model_score.q_model_auc_holdout,
-                                   model_score.SQL_MODEL_AUC_HOLDOUT),
-        "text_boilerplate_lines": (linededup.q_boilerplate_lines,
-                                   linededup.SQL_BOILERPLATE_LINES),
-        "text_line_quality": (linededup.q_line_quality,
-                              linededup.SQL_LINE_QUALITY),
-        "text_embed_hash": (embed.q_text_embed_hash,
-                            embed.SQL_TEXT_EMBED_HASH),
-        "text_normalize": (textnorm.q_text_normalize,
-                           textnorm.SQL_TEXT_NORMALIZE),
-        "text_dsir_select": (dsir.q_dsir_select,
-                             dsir.SQL_DSIR_SELECT),
-        "text_datacard_exemplars": (
-            datacard.q_text_datacard_exemplars,
-            datacard.SQL_TEXT_DATACARD_EXEMPLARS),
-        "text_badwords": (badwords.q_text_badwords,
-                          badwords.SQL_TEXT_BADWORDS),
-        "host_link_centrality": (linkgraph.q_link_centrality,
-                                 linkgraph.SQL_LINK_CENTRALITY),
-        "host_anchor_texts": (linkgraph.q_host_anchors,
-                              linkgraph.SQL_HOST_ANCHORS),
-        "mm_metadata": (multimodal.q_mm_metadata,
-                        multimodal.SQL_MM_METADATA),
-        "text_token_count": (textstats.q_token_count,
-                             textstats.SQL_TOKEN_COUNT),
-        "text_bpe_token_estimate": (textstats.q_bpe_token_estimate,
-                                    textstats.SQL_BPE_TOKEN_ESTIMATE),
-        "text_quality_filter": (textstats.q_quality_filter,
-                                textstats.SQL_QUALITY_FILTER),
-        "text_lang_guess": (textstats.q_lang_guess,
-                            textstats.SQL_LANG_GUESS),
-        "text_fingerprint": (textstats.q_fingerprint,
-                             textstats.SQL_FINGERPRINT),
-        "sample_stratified_hash": (textstats.q_sample_stratified_hash,
-                                   textstats.SQL_SAMPLE_STRATIFIED_HASH),
-        "dedup_minhash_signatures": (dedup.q_dedup_minhash,
-                                     dedup.SQL_DEDUP_MINHASH),
-        "dedup_jaccard_pairs": (dedup.q_dedup_jaccard_pairs,
-                                dedup.SQL_DEDUP_JACCARD_PAIRS),
-        "dedup_incremental": (dedup.q_dedup_incremental,
-                              dedup.SQL_DEDUP_INCREMENTAL),
-        "dedup_lsh_buckets": (dedup.q_dedup_lsh_buckets,
-                              dedup.SQL_DEDUP_LSH_BUCKETS),
-        "knn_brute_cosine": (simsearch.q_knn_brute_cosine,
-                             simsearch.SQL_KNN_BRUTE_COSINE),
-        "ann_sign_buckets": (simsearch.q_ann_sign_buckets,
-                             simsearch.SQL_ANN_SIGN_BUCKETS),
-        "ann_bucketed_knn": (simsearch.q_ann_bucketed_knn,
-                             simsearch.SQL_ANN_BUCKETED_KNN),
-    }
-
-
 @pytest.fixture(scope="module")
 def hostile_dir():
     import gen_hostile
@@ -245,12 +130,7 @@ def test_hostile_parity(spark, hostile_dir, duck, name):
     from parity_check import value_hash
 
     import __spark_entry__ as entry_mod
-    extra = _extra_queries()
-    if name in extra:
-        fn, sql = extra[name]
-    else:
-        fn = entry_mod.queries()[name]
-        sql = entry_mod.oracle_sql()[name]
+    fn, sql = entry_mod.catalog()[name]
 
     df = fn(spark, hostile_dir)
     s_cols = df.columns

@@ -282,3 +282,21 @@ def test_epoch_counts_through_observe_and_writes_once(spark, state,
     assert {r["epoch"] for r in shard.collect()} <= {c["epoch"]}
     assert sig_rows(shard) == sig_rows(build_dedup_index(kept))
     assert shard.count() == c["index_rows_appended"]
+
+
+def test_unreadable_index_shard_fails_the_refresh(spark, tmp_path):
+    """A committed index shard whose part files are garbage must fail
+    the next refresh before its commit marker — never be read as an
+    empty index, which would commit an epoch that was not deduplicated."""
+    state = str(tmp_path)
+    refresh(spark, corpus.pages_df(spark, 20), state)
+    shard = os.path.join(state, "index", "e000000")
+    parts = [f for f in os.listdir(shard) if f.endswith(".parquet")]
+    assert parts
+    for f in parts:
+        with open(os.path.join(shard, f), "wb") as fh:
+            fh.write(b"not a parquet file\n" * 8)
+    with pytest.raises(Exception):
+        refresh(spark, corpus.pages_df(spark, 24), state)
+    assert not os.path.exists(os.path.join(
+        state, "epochs", "e000001", "_refresh_complete.json"))

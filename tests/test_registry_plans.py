@@ -1,10 +1,11 @@
-"""Registry-wide scale-killer sweep: EVERY driver query's physical plan
-is checked for the three patterns that do not survive a 100× scale-up —
-row-at-a-time Python UDFs (BatchEvalPython), unbounded cartesian
-pairings, and nested-loop joins that are not deliberate broadcast-bounded
-designs. test_plans.py pins per-query positive properties; this sweep
-guarantees the NEGATIVE property across the whole 50-entry surface, so a
-new or edited query cannot quietly regress into a quadratic plan."""
+"""Catalog-wide scale-killer sweep: EVERY registered query's physical
+plan is checked for the three patterns that do not survive a 100×
+scale-up — row-at-a-time Python UDFs (BatchEvalPython), unbounded
+cartesian pairings, and nested-loop joins that are not deliberate
+broadcast-bounded designs. test_plans.py pins per-query positive
+properties; this sweep guarantees the NEGATIVE property across the whole
+catalog, so a new or edited query cannot quietly regress into a
+quadratic plan."""
 
 from __future__ import annotations
 
@@ -32,67 +33,26 @@ BNLJ_OK = {"ann_recall_eval", "text_langid_eval", "host_link_centrality",
            "text_lm_perplexity", "host_anchor_texts",
            # text_dsir_select: the smoothing-totals frame is a broadcast
            # 1-row aggregate crossJoined onto the <=DSIR_DIM-row model
-           "text_dsir_select"}
+           "text_dsir_select",
+           # knn_brute_cosine: the corpus is crossJoined against the
+           # broadcast 1-row query vector (one dot product per row)
+           "knn_brute_cosine"}
 
-def _extra_queries():
-    """Oracled operators living outside the 50-row driver window (the
-    hostile gate carries their value parity; this sweep carries their
-    plan discipline)."""
-    from ocr_module_spark.functions import (badwords, datacard, dedup,
-                                            embed, exactsubstr,
-                                            hostrep, langid, linededup,
-                                            linkgraph, mixture,
-                                            model_score, multimodal,
-                                            ngramlm, packing,
-                                            snapshots, splits, textnorm,
-                                            textstats, urls)
-    from ocr_module_spark.operators import relational
-    from ocr_module_spark.operators.extraction import (
-        q_region_pixel_features)
-    return {
-        "text_langid_eval": langid.q_langid_eval,
-        "host_reputation": hostrep.q_host_reputation,
-        "host_link_centrality": linkgraph.q_link_centrality,
-        "host_anchor_texts": linkgraph.q_host_anchors,
-        "snapshot_diff": snapshots.q_snapshot_diff,
-        # curate_pack_sequences / fn_url_canonicalize moved INTO the
-        # driver window in round 4; proj_bbox / token_split left it
-        "proj_bbox_reduction_units": relational.q_bbox_reduction_units,
-        "fn_token_split_count": relational.q_token_split_count,
-        # round-5 rotation: these five left the driver window (slots
-        # taken by the r4 flagships); the sweep keeps their plan gate
-        "agg_content_length": relational.q_content_length,
-        "json_pointer_extract": relational.q_json_pointer_extract,
-        "join_positional_zip": relational.q_positional_zip_join,
-        "mm_frame_sample": multimodal.q_mm_frame_sample,
-        "text_rolling_fingerprint": textstats.q_rolling_fingerprint,
-        "curate_pack_salted": packing.q_pack_sequences_salted,
-        "curate_pack_materialize": packing.q_pack_materialize,
-        "curate_shards": packing.q_curate_shards,
-        "curate_shards_salted": packing.q_curate_shards_salted,
-        "fn_url_latest_revision": urls.q_url_latest_revision,
-        "text_model_score": model_score.q_model_score,
-        "text_model_auc": model_score.q_model_auc,
-        "text_model_auc_holdout": model_score.q_model_auc_holdout,
-        "region_pixel_features": q_region_pixel_features,
-        "curate_split": splits.q_split_rollup,
-        "curate_split_leakage": splits.q_split_leakage_audit,
-        "curate_split_repair": splits.q_split_repair,
-        "curate_mixture_epochs": mixture.q_mixture_epochs,
-        "text_boilerplate_lines": linededup.q_boilerplate_lines,
-        "text_line_quality": linededup.q_line_quality,
-        "text_normalize": textnorm.q_text_normalize,
-        "text_lm_perplexity": ngramlm.q_lm_perplexity,
-        "text_embed_hash": embed.q_text_embed_hash,
-        "dedup_jaccard_pairs": dedup.q_dedup_jaccard_pairs,
-        "dedup_exactsubstr": exactsubstr.q_dedup_exactsubstr,
-        "text_datacard": datacard.q_text_datacard,
-        "text_datacard_exemplars": datacard.q_text_datacard_exemplars,
-        "text_badwords": badwords.q_text_badwords,
-    }
+_QUERIES = sorted((name, fn) for name, (fn, _sql)
+                  in entry_mod.catalog().items())
 
 
-_QUERIES = sorted({**entry_mod.queries(), **_extra_queries()}.items())
+def test_driver_window_is_pinned():
+    """The driver checks the first 50 rows of queries() in dict order:
+    the window is exactly DRIVER_WINDOW, 50 unique names, all oracled,
+    and every hostile-corpus query resolves through the catalog."""
+    from test_hostile_parity import DOC_QUERIES
+
+    window = entry_mod.DRIVER_WINDOW
+    assert list(entry_mod.queries()) == list(window)
+    assert len(window) == len(set(window)) == 50
+    assert set(entry_mod.oracle_sql()) == set(window)
+    assert set(DOC_QUERIES) <= set(entry_mod.catalog())
 
 
 @pytest.mark.parametrize("name,fn", _QUERIES, ids=[n for n, _ in _QUERIES])

@@ -1,6 +1,8 @@
-"""Local replica of the driver's correctness gate: run every queries()
-entry on Spark and its oracle_sql() on DuckDB over the same parquet dir,
-compare row count, column names, and an order-insensitive value hash.
+"""Local replica of the driver's correctness gate, over the whole operator
+catalog (the driver's 50-row window and every entry beyond it): run each
+``catalog()`` query on Spark and its oracle SQL on DuckDB over the same
+parquet dir, compare row count, column names, and an order-insensitive
+value hash. Entries without an oracle are checked for non-empty output.
 
     python tools/parity_check.py [sf_dir] [name_filter]
 """
@@ -58,60 +60,9 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = dict(entry_mod.queries())
-    oracles = dict(entry_mod.oracle_sql())
-    # oracled operators living OUTSIDE the 50-row driver window (the
-    # registry is pinned at 50 so every driver row stays green; these
-    # get the identical gate here and in tests/test_hostile_parity.py)
-    from ocr_module_spark.functions import (badwords, datacard, dsir,
-                                            embed, hostrep, langid,
-                                            linededup, linkgraph, mixture,
-                                            model_score, multimodal,
-                                            ngramlm, packing, snapshots,
-                                            splits, textnorm, textstats,
-                                            urls)
-    for mod in (packing, urls, model_score, langid, hostrep, snapshots,
-                splits, mixture, linededup, linkgraph, textnorm, ngramlm,
-                embed, dsir, datacard, badwords,
-                # round-5 rotation: mm_frame_sample /
-                # text_rolling_fingerprint left the driver window; their
-                # module REGISTRYs keep the entries, setdefault restores
-                # the identical gate here
-                multimodal, textstats):
-        for name, (fn, sql) in mod.REGISTRY.items():
-            qs.setdefault(name, fn)
-            if sql is not None:
-                oracles.setdefault(name, sql)
-    qs.setdefault("curate_pack_materialize", packing.q_pack_materialize)
-    oracles.setdefault("curate_pack_materialize",
-                       packing.SQL_PACK_MATERIALIZE)
-    # rotated out of the driver window in round 4 (slot taken by
-    # text_dsir_select); identical value gate here + hostile parity
-    from ocr_module_spark.functions import dedup
-    qs.setdefault("dedup_jaccard_pairs", dedup.q_dedup_jaccard_pairs)
-    oracles.setdefault("dedup_jaccard_pairs", dedup.SQL_DEDUP_JACCARD_PAIRS)
-    # rotated out of the driver window in round 4 (slots taken by
-    # curate_pack_sequences / fn_url_canonicalize)
-    from ocr_module_spark.operators import relational
-    for name, fn, sql in (
-            ("proj_bbox_reduction_units", relational.q_bbox_reduction_units,
-             relational.SQL_BBOX_REDUCTION_UNITS),
-            ("fn_token_split_count", relational.q_token_split_count,
-             relational.SQL_TOKEN_SPLIT_COUNT),
-            # rotated out in round 5 (slots taken by the r4 flagships);
-            # identical value gate here + hostile parity, and the first
-            # two are column-folded into agg_usage_stats /
-            # agg_mismatch_audit on the same scans
-            ("agg_content_length", relational.q_content_length,
-             relational.SQL_CONTENT_LENGTH),
-            ("json_pointer_extract", relational.q_json_pointer_extract,
-             relational.SQL_JSON_POINTER_EXTRACT),
-            ("join_positional_zip", relational.q_positional_zip_join,
-             relational.SQL_POSITIONAL_ZIP_JOIN)):
-        qs.setdefault(name, fn)
-        oracles.setdefault(name, sql)
+    cat = entry_mod.catalog()
     failures = []
-    for name, fn in sorted(qs.items()):
+    for name, (fn, sql) in sorted(cat.items()):
         if name_filter and name_filter not in name:
             continue
         t0 = time.time()
@@ -119,14 +70,14 @@ def main() -> int:
         s_cols = df.columns
         s_rows = [tuple(r) for r in df.collect()]
         t_spark = time.time() - t0
-        if name not in oracles:
+        if sql is None:
             print(f"  {name:32s} rows={len(s_rows):7d} (rows-only) "
                   f"spark={t_spark:5.1f}s")
-            if not s_rows and not name.startswith("dedup_lsh"):
+            if not s_rows:
                 failures.append((name, "empty result"))
             continue
         t0 = time.time()
-        res = con.sql(oracles[name])
+        res = con.sql(sql)
         d_cols = res.columns
         d_rows = res.fetchall()
         t_duck = time.time() - t0

@@ -2,8 +2,8 @@
 
 The scale discipline (pushdown, pruning, broadcast, partial aggregation,
 whole-stage codegen, zero-exchange extraction) is asserted by
-tests/test_plans.py; this report makes it inspectable without running
-anything.
+tests/test_plans.py and tests/test_registry_plans.py; this report makes
+it inspectable. PLANS.md is generated on demand, not committed.
 
     python tools/plan_report.py [sf_dir]
 """
@@ -186,43 +186,11 @@ def main() -> int:
 
     spark = get_spark("plan-report", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(entry_mod.queries())
-    # oracled operators outside the 50-row driver window
-    from ocr_module_spark.functions import (embed, hostrep, langid, linededup,
-                                            linkgraph, mixture, model_score,
-                                            ngramlm, packing, snapshots,
-                                            splits, textnorm, urls)
-    qs.update({name: fn for name, (fn, _sql) in
-               {**packing.REGISTRY, **urls.REGISTRY,
-                **model_score.REGISTRY, **langid.REGISTRY,
-                **hostrep.REGISTRY, **snapshots.REGISTRY,
-                **splits.REGISTRY, **mixture.REGISTRY,
-                **linededup.REGISTRY, **textnorm.REGISTRY,
-                **ngramlm.REGISTRY, **embed.REGISTRY}.items()})
+    qs = {name: fn for name, (fn, _sql) in entry_mod.catalog().items()}
     # the report shows the per-round plan (rounds=1); the 3-round
     # unrolled parity query is the same shape repeated ~2700 nodes deep
+    from ocr_module_spark.functions import linkgraph
     qs["host_link_centrality"] = linkgraph.q_link_centrality_round_plan
-    qs["curate_pack_materialize"] = packing.q_pack_materialize
-    from ocr_module_spark.functions.dedup import (q_dedup_incremental,
-                                                  q_dedup_jaccard_pairs)
-    qs["dedup_incremental"] = q_dedup_incremental
-    from ocr_module_spark.functions.simsearch import q_knn_brute_cosine
-    qs["knn_brute_cosine"] = q_knn_brute_cosine
-    # rotated out of the 50-row driver window for text_dsir_select
-    # (hostile gate keeps its DuckDB parity); the plan is still reported
-    qs["dedup_jaccard_pairs"] = q_dedup_jaccard_pairs
-    from ocr_module_spark.functions.exactsubstr import q_dedup_exactsubstr
-    qs["dedup_exactsubstr"] = q_dedup_exactsubstr
-    from ocr_module_spark.functions.datacard import (
-        q_text_datacard, q_text_datacard_exemplars)
-    qs["text_datacard"] = q_text_datacard
-    qs["text_datacard_exemplars"] = q_text_datacard_exemplars
-    from ocr_module_spark.functions.badwords import q_text_badwords
-    qs["text_badwords"] = q_text_badwords
-    from ocr_module_spark.functions.model_score import (
-        q_model_auc, q_model_auc_holdout)
-    qs["text_model_auc"] = q_model_auc
-    qs["text_model_auc_holdout"] = q_model_auc_holdout
 
     out = ["# PLANS — physical plans of the headline queries",
            "",
