@@ -23,9 +23,10 @@ swap in ``xxhash64`` with one line.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import sinks
 from .hashing import hex4_sql_duck
 
 N_BANDS = 4
@@ -477,73 +478,55 @@ def lsh_edges_frame(docs: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lsh_edges_frame(_docs(spark, sf_dir))
+def cc_labels(edges: DataFrame) -> DataFrame:
+    """Min-label propagation (connected components) over the star edges
+    ``(a, b)`` of :func:`lsh_edges_frame`, symmetrized here: ``(node,
+    label)``, label = the smallest node id within ``CC_ROUNDS`` hops.
 
-
-def sym_edges(edges: DataFrame) -> DataFrame:
-    """Symmetrize star edges ``(a, b)`` for label propagation.
-    localCheckpoint (not cache): the frame is re-read every propagation
-    round, and the eager checkpoint is GC-released once the labels
-    materialize — a cache() would accumulate executor storage for the
-    session lifetime across the driver's 50-query run."""
-    return edges.selectExpr("a AS src", "b AS dst").unionByName(
-        edges.selectExpr("b AS src", "a AS dst")).localCheckpoint(eager=True)
-
-
-def cc_labels(sym: DataFrame, rounds: int, converge: bool = False) -> DataFrame:
-    """Min-label propagation over symmetric edge list ``sym(src, dst)``.
-
-    converge=False: exactly ``rounds`` pulls (deterministic, SQL-mirrorable).
-    converge=True: iterate until no label changes (true connected
-    components).
-
-    Every round is localCheckpoint'ed: the label frame references itself
-    through the round's join, so without materialization the plan doubles
-    per round (2^rounds copies of the minhash subtree — measured minutes
-    at 8 rounds vs seconds checkpointed).
+    Each round is one join + one aggregation. The loop stops after the
+    first round that changes no label, or after ``CC_ROUNDS``: a round
+    is a pure function of (edges, labels), so a fixpoint stays one and
+    the result equals the ``CC_ROUNDS``-round labels of the DuckDB twin
+    (``SQL_DEDUP_CC_CLUSTERS``). ``sum(label < old)`` is observed on the
+    round's eager checkpoint; an Observation AQE never filled (empty
+    plan) reads 0, i.e. stop. localCheckpoint, not cache(): the label
+    frame references itself through the round's join (the plan would
+    double per round), and a checkpoint is GC-released with the frame.
     """
+    sym = edges.selectExpr("a AS src", "b AS dst").unionByName(
+        edges.selectExpr("b AS src", "a AS dst")).localCheckpoint(eager=True)
     labels = sym.select(F.col("src").alias("node")).distinct() \
         .withColumn("label", F.col("node"))
-    i = 0
-    while True:
+    for _ in range(1, CC_ROUNDS + 1):
         nbmin = (sym.join(labels, sym.dst == labels.node)
                  .groupBy("src").agg(F.min("label").alias("nbmin")))
-        new = (labels.join(nbmin, labels.node == nbmin.src, "left")
-               .select(F.col("node"),
-                       F.least(F.col("label"),
-                               F.coalesce(F.col("nbmin"), F.col("label")))
-                       .alias("label")))
-        i += 1
-        new = new.localCheckpoint(eager=True)
-        if converge:
-            changed = (new.alias("n")
-                       .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                       .where(F.col("n.label") != F.col("o.label")).count())
-            labels = new
-            if changed == 0 or i >= 64:
-                return labels
-        else:
-            labels = new
-            if i >= rounds:
-                return labels
+        obs = Observation()
+        labels = (labels.join(nbmin, labels.node == nbmin.src, "left")
+                  .select(F.col("node"),
+                          F.least(F.col("label"),
+                                  F.coalesce(F.col("nbmin"), F.col("label")))
+                          .alias("label"),
+                          F.col("label").alias("old"))
+                  .observe(obs, F.sum((F.col("label") < F.col("old"))
+                                      .cast("long")).alias("changed"))
+                  .drop("old")
+                  .localCheckpoint(eager=True))
+        if not sinks.observed(obs, {"changed": 0})["changed"]:
+            break
+    return labels
 
 
 def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster assignment: bounded-round min-label propagation
-    (connected components) over the LSH candidate graph — the step that
-    turns pairwise near-dup evidence into keep/drop groups in a
-    large-scale dedup pipeline. Each round is one join + one aggregation
-    (shuffle on node id); CC_ROUNDS is fixed so both engines compute the
-    identical deterministic result. CC_ROUNDS=8 pulls labels 8 hops;
-    bucket-min star edges chained across bands can in principle exceed
-    that (a component split across two reported clusters), so production
-    runs cc_labels(converge=True) — iterate to fixpoint with
-    localCheckpoint per round; the bounded variant exists because a
-    fixpoint loop cannot be mirrored in a single oracle SQL statement.
-    tests assert the bounded and converged variants agree on the corpus."""
-    edges = _lsh_edges(spark, sf_dir)
-    labels = cc_labels(sym_edges(edges), CC_ROUNDS)
+    """Duplicate-cluster assignment: min-label propagation (connected
+    components, :func:`cc_labels`) over the LSH candidate graph — the
+    step that turns pairwise near-dup evidence into keep/drop groups in
+    a large-scale dedup pipeline. ``CC_ROUNDS`` bounds the rounds so
+    both engines compute the identical deterministic result: labels
+    travel at most 8 hops, and bucket-min star edges chained across
+    bands could in principle exceed that (a component split across two
+    reported clusters); tests check the labels against a union-find on
+    the corpus."""
+    labels = cc_labels(lsh_edges_frame(_docs(spark, sf_dir)))
     return (labels.groupBy("label")
             .agg(F.count("*").alias("cluster_size"),
                  F.min("node").alias("min_doc"))
@@ -607,8 +590,7 @@ def dedup_decision_frame(docs: DataFrame,
     pipeline feeds from its quality signals (e.g. token count). One
     broadcast-shaped extra join on the clustered-docs side only; the
     default stays the stable quality-free min-doc canonical."""
-    edges = lsh_edges_frame(docs)
-    labels = cc_labels(sym_edges(edges), CC_ROUNDS)
+    labels = cc_labels(lsh_edges_frame(docs))
     if quality is None:
         keepers = labels.groupBy("label").agg(F.min("node").alias("keeper"))
     else:
@@ -803,6 +785,20 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
         "doc_id", exact_dup.alias("exact_dup"), near_dup.alias("near_dup"),
         "n_sig_agree", "matched_doc",
         (~(exact_dup | near_dup)).alias("keep"))
+
+
+def dedup_increment(docs: DataFrame,
+                    index: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One incremental dedup step of a fresh batch ``docs(doc_id, text)``
+    against the signature ``index``: ``(decisions, index_rows)``. The
+    batch's signatures are built and materialized once; the probe reads
+    them with ``exclude_self`` (a replayed batch gets identical
+    decisions) and is materialized; ``index_rows``, the kept docs'
+    signatures, is lazy. The caller stamps, writes and counts both."""
+    sigs = build_dedup_index(docs).localCheckpoint(eager=True)
+    dec = dedup_against_index(docs, index, exclude_self=True,
+                              new_idx=sigs).localCheckpoint(eager=True)
+    return dec, dec.where("keep").select("doc_id").join(sigs, "doc_id")
 
 
 def compact_dedup_index(index: DataFrame, url_keyed: bool = False,

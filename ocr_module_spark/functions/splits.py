@@ -114,8 +114,8 @@ def split_leakage_frame(docs: DataFrame,
     corpus); the split join is one equi-join on doc_id; the rollup is a
     partial-aggregated groupBy on the cluster label. Nothing beyond
     what the keep-list chain already shuffles."""
-    from .dedup import CC_ROUNDS, cc_labels, lsh_edges_frame, sym_edges
-    labels = cc_labels(sym_edges(lsh_edges_frame(docs)), CC_ROUNDS)
+    from .dedup import cc_labels, lsh_edges_frame
+    labels = cc_labels(lsh_edges_frame(docs))
     lab = labels.join(
         split_assignments(docs, group_col)
         .select(F.col("doc_id").alias("node"), "split"), "node")
@@ -156,8 +156,8 @@ def split_repair_assignments(docs: DataFrame,
     one min_by aggregation at cluster grain; docs get their verdict via
     one LEFT equi-join on doc_id. Nothing beyond the keep-list's
     shuffles."""
-    from .dedup import CC_ROUNDS, cc_labels, lsh_edges_frame, sym_edges
-    labels = cc_labels(sym_edges(lsh_edges_frame(docs)), CC_ROUNDS)
+    from .dedup import cc_labels, lsh_edges_frame
+    labels = cc_labels(lsh_edges_frame(docs))
     base = split_assignments(docs, group_col).select("doc_id", "split")
     lab = labels.join(base.withColumnRenamed("doc_id", "node"), "node")
     canon = (lab.groupBy("label")

@@ -13,7 +13,7 @@ into that loop, one epoch per snapshot:
        anti-join within the epoch)
     4. tombstone removed urls         (per-epoch parquet)
     5. dedup the fresh docs against the cross-snapshot signature index
-       (dedup.dedup_against_index, exclude_self — torn-epoch
+       (dedup.dedup_increment, exclude_self — torn-epoch
        idempotent) and append their index rows
     6. commit: overwrite the fingerprint table (the diff's new side),
        then write the epoch's ``_refresh_complete.json`` marker (the
@@ -65,14 +65,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks
-from .functions.dedup import (build_dedup_index, compact_dedup_index,
-                              dedup_against_index)
+from .functions.dedup import compact_dedup_index, dedup_increment
 from .functions.snapshots import snapshot_diff
 
 _MARKER = "_refresh_complete.json"
@@ -143,32 +143,25 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
     diff.where("status = 'removed'").select("url") \
         .write.mode("overwrite").parquet(os.path.join(edir, "removed"))
 
-    # 5. incremental dedup of the fresh docs against the index; the
-    # epoch's decisions and index shard are per-epoch overwrites, and
-    # exclude_self keeps a replayed epoch's decisions identical even
-    # after its own index shard landed. A no-op epoch (nothing added or
-    # changed) wrote no parquet part files — schema inference would
-    # fail, and there is nothing to dedup. The fresh docs' signatures
-    # are built once: the probe reads them and the shard is their kept
-    # rows
+    # 5. incremental dedup of the fresh docs against the index
+    # (dedup.dedup_increment); the epoch's decisions and index shard are
+    # per-epoch overwrites, and exclude_self keeps a replayed epoch's
+    # decisions identical even after its own index shard landed. A
+    # no-op epoch (nothing added or changed) wrote no parquet part
+    # files and reads as an empty frame: nothing to dedup
     docs = _read_epoch_docs(spark, edir)
-    index = _read_index(spark, state_dir)
-    sigs = build_dedup_index(docs).localCheckpoint(eager=True)
-    dec = dedup_against_index(docs, index, exclude_self=True,
-                              new_idx=sigs) \
-        .withColumn("epoch", F.lit(epoch)) \
-        .localCheckpoint(eager=True)
+    dec, rows = dedup_increment(docs, _read_index(spark, state_dir))
     dec_obs = Observation("refresh_dedup")
-    dec.observe(dec_obs, F.count(F.lit(1)).alias("dedup_docs"),
-                F.sum(F.col("exact_dup").cast("long")).alias("dedup_exact"),
-                F.sum(F.col("near_dup").cast("long")).alias("dedup_near"),
-                F.sum(F.col("keep").cast("long")).alias("dedup_kept")) \
+    dec.withColumn("epoch", F.lit(epoch)) \
+        .observe(dec_obs, F.count(F.lit(1)).alias("dedup_docs"),
+                 F.sum(F.col("exact_dup").cast("long")).alias("dedup_exact"),
+                 F.sum(F.col("near_dup").cast("long")).alias("dedup_near"),
+                 F.sum(F.col("keep").cast("long")).alias("dedup_kept")) \
         .write.mode("overwrite").parquet(
             os.path.join(state_dir, "decisions", f"e{epoch:06d}"))
     counters.update(sinks.observed(dec_obs, dict.fromkeys(
         ("dedup_docs", "dedup_exact", "dedup_near", "dedup_kept"), 0)))
-    shard = dec.where("keep").select("doc_id").join(sigs, "doc_id") \
-        .withColumn("epoch", F.lit(epoch))
+    shard = rows.withColumn("epoch", F.lit(epoch))
     shard_obs = Observation("refresh_shard")
     shard.observe(shard_obs,
                   F.count(F.lit(1)).alias("index_rows_appended")) \
@@ -272,10 +265,17 @@ def compact_index(spark: SparkSession, state_dir: str,
     compacted = compact_dedup_index(
         live, url_keyed=True, order_col="epoch",
         ttl_min_order=ttl_min_epoch).localCheckpoint(eager=True)
+    # the compacted shard lands on disk before any old shard goes: a
+    # crash in between leaves duplicate rows (which the any-match probe
+    # and the next compaction tolerate), never an empty index
     root = os.path.join(state_dir, "index")
-    shutil.rmtree(root, ignore_errors=True)
+    staged = os.path.join(root, f"compacted-{uuid.uuid4().hex}")
     after = Observation("index_after")
     compacted.observe(after, F.count(F.lit(1)).alias("index_rows_after")) \
-        .write.mode("overwrite").parquet(os.path.join(root, "compacted"))
+        .write.parquet(staged)
+    for name in os.listdir(root):
+        if name != os.path.basename(staged):
+            shutil.rmtree(os.path.join(root, name))
+    os.rename(staged, os.path.join(root, "compacted"))
     return {**sinks.observed(before, {"index_rows_before": 0}),
             **sinks.observed(after, {"index_rows_after": 0})}

@@ -95,7 +95,7 @@ def run_incremental_dedup(spark: SparkSession, landing_dir: str,
     table). Doc ids in this runner are urls (strings); seed the index
     from a corpus snapshot with string ids for the schemas to line up.
     """
-    from ..functions.dedup import build_dedup_index, dedup_against_index
+    from ..functions.dedup import dedup_increment
     if checkpoint_dir is None:
         checkpoint_dir = os.path.join(decisions_dir, "_checkpoint")
 
@@ -105,15 +105,10 @@ def run_incremental_dedup(spark: SparkSession, landing_dir: str,
                 .localCheckpoint(eager=True))
         index = sinks.read_parquet_or_empty(   # first epoch: no index yet
             s, index_dir, "doc_id string, norm_md5 string, sig array<string>")
-        # signatures built once: the probe reads them, the kept ones
-        # are the epoch's index rows
-        sigs = build_dedup_index(docs).localCheckpoint(eager=True)
-        dec = dedup_against_index(docs, index, exclude_self=True,
-                                  new_idx=sigs).localCheckpoint(eager=True)
+        dec, rows = dedup_increment(docs, index)
         (dec.withColumn("epoch", F.lit(epoch_id))
             .write.mode("append").parquet(decisions_dir + "/data"))
-        (dec.where("keep").select("doc_id").join(sigs, "doc_id")
-            .write.mode("append").parquet(index_dir))
+        rows.write.mode("append").parquet(index_dir)
 
     q = (stream_pages(spark, landing_dir).writeStream
          .foreachBatch(_epoch)

@@ -300,3 +300,32 @@ def test_unreadable_index_shard_fails_the_refresh(spark, tmp_path):
         refresh(spark, corpus.pages_df(spark, 24), state)
     assert not os.path.exists(os.path.join(
         state, "epochs", "e000001", "_refresh_complete.json"))
+
+
+def test_failed_compaction_write_keeps_the_index(spark, tmp_path,
+                                                 monkeypatch):
+    """A compaction whose write fails leaves the index it read: the
+    compacted shard is written before any old shard is removed. A
+    successful compaction then leaves the one compacted shard."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    from ocr_module_spark.refresh import _read_index
+    state = str(tmp_path)
+    refresh(spark, corpus.pages_df(spark, 20), state)
+
+    def rows():
+        return sorted((r["doc_id"], r["norm_md5"], tuple(r["sig"]),
+                       r["epoch"])
+                      for r in _read_index(spark, state).collect())
+    before = rows()
+    assert before
+
+    def failing_write(self, path, *args, **kwargs):
+        raise OSError(f"write to {path} failed")
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(OSError):
+        compact_index(spark, state)
+    monkeypatch.undo()
+    assert rows() == before
+
+    compact_index(spark, state)
+    assert os.listdir(os.path.join(state, "index")) == ["compacted"]

@@ -163,21 +163,62 @@ def test_bpe_token_estimate_superset_of_words(spark, sf_dir):
         assert r["tokens_minus_words"] >= 0
 
 
-def test_cc_bounded_rounds_match_converged(spark, sf_dir):
-    """The CC_ROUNDS-bounded label propagation (the oracle-mirrorable
-    variant) must agree with iterate-to-fixpoint on the test corpus —
-    if a corpus change ever makes chains longer than CC_ROUNDS hops,
-    this fails and CC_ROUNDS must be raised."""
-    from pyspark.sql import functions as F
-    from ocr_module_spark.functions.dedup import CC_ROUNDS, _lsh_edges, cc_labels
-    edges = _lsh_edges(spark, sf_dir)
-    sym = edges.selectExpr("a AS src", "b AS dst").unionByName(
-        edges.selectExpr("b AS src", "a AS dst")).cache()
-    bounded = {(r["node"], r["label"])
-               for r in cc_labels(sym, CC_ROUNDS).collect()}
-    converged = {(r["node"], r["label"])
-                 for r in cc_labels(sym, 0, converge=True).collect()}
-    assert bounded == converged
+def test_cc_labels_match_union_find(spark, sf_dir):
+    """The CC_ROUNDS-bounded label propagation equals true connected
+    components — a pure-Python union-find over the same collected
+    edges — on the test corpus: if a corpus change ever makes chains
+    longer than CC_ROUNDS hops, this fails and CC_ROUNDS must be
+    raised."""
+    from ocr_module_spark.functions.dedup import (_docs, cc_labels,
+                                                  lsh_edges_frame)
+    edges = lsh_edges_frame(_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    root: dict = {}
+
+    def find(x):
+        root.setdefault(x, x)
+        while root[x] != x:
+            root[x] = root[root[x]]
+            x = root[x]
+        return x
+    for r in edges.collect():
+        ra, rb = find(r["a"]), find(r["b"])
+        # the smaller root wins, so every root is its component's min
+        root[max(ra, rb)] = min(ra, rb)
+    assert root, "the test corpus has near-dup edges"
+    assert {(r["node"], r["label"]) for r in cc_labels(edges).collect()} \
+        == {(n, find(n)) for n in list(root)}
+
+
+@pytest.mark.parametrize("k", [3, 7, 12])
+def test_cc_labels_stop_at_fixpoint(spark, monkeypatch, k):
+    """On the path 0-1-...-k label 0 needs k rounds to reach node k, so
+    the loop runs k + 1 rounds (the last changes nothing) and stops at
+    CC_ROUNDS when k + 1 exceeds it; either way the labels are those of
+    exactly CC_ROUNDS synchronous min-pull rounds. Rounds are counted
+    as checkpoints of a label frame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from ocr_module_spark.functions.dedup import CC_ROUNDS, cc_labels
+    edges = spark.createDataFrame([(i, i + 1) for i in range(k)],
+                                  "a long, b long")
+    rounds = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        if "label" in self.columns:
+            rounds.append(self.columns)
+        return checkpoint(self, *args, **kwargs)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    got = {(r["node"], r["label"]) for r in cc_labels(edges).collect()}
+    monkeypatch.undo()
+
+    nbrs = {n: {m for m in (n - 1, n + 1) if 0 <= m <= k}
+            for n in range(k + 1)}
+    label = {n: n for n in nbrs}
+    for _ in range(1, CC_ROUNDS + 1):
+        label = {n: min([label[n]] + [label[m] for m in nbrs[n]])
+                 for n in nbrs}
+    assert got == set(label.items())
+    assert len(rounds) == min(CC_ROUNDS, k + 1)
 
 
 def test_png_codec_round_trip():
