@@ -203,8 +203,8 @@ def curated_from_audit(audit: DataFrame, scrub: bool = False,
         from .functions.linededup import strip_boilerplate_lines
         from .pipeline import with_host
         # boiler_flags: a precomputed/checkpointed flagged_lines frame —
-        # callers that also report flag counters (tools/curate.py) pass
-        # it so the exploded-lines census runs once, not per consumer
+        # tools/curate.py passes the one its flag counters ride on, so
+        # the exploded-lines aggregation runs once, not per consumer
         kept = (strip_boilerplate_lines(
                     with_host(kept), group_col="url_host", key_col="url",
                     flags=boiler_flags)

@@ -75,6 +75,7 @@ def top_pair(symframe: DataFrame) -> tuple[str, str, int] | None:
         "filter(zip_with(syms, slice(syms, 2, size(syms) - 1),"
         " (a, b) -> struct(a, b)), p -> p.b IS NOT NULL"
         f" AND NOT endswith(p.a, '{END}'))")).alias("p"))
+    # driver collect bound: 1 row (limit(1))
     top = (pairs.groupBy("p").agg(F.count("*").alias("n"))
            .orderBy(F.col("n").desc(), F.col("p.a"), F.col("p.b"))
            .limit(1).collect())

@@ -61,13 +61,16 @@ def compression_stats_str(s: str | None):
             ratio < RATIO_LO, ratio > RATIO_HI)
 
 
-_SCHEMA = ("doc_id long, raw_len long, comp_len long, ratio_x1000 long, "
-           "too_repetitive boolean, incompressible boolean")
+_STATS = ("raw_len long, comp_len long, ratio_x1000 long, "
+          "too_repetitive boolean, incompressible boolean")
 
 
 def compression_frame(docs: DataFrame, key_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
-    """Per-doc compression stats — one Arrow stage, zero exchanges."""
+    """Per-doc compression stats — one Arrow stage, zero exchanges.
+    The key passes through as ``doc_id`` with the input's own type
+    (long ids and string urls both work)."""
+    key_type = docs.schema[key_col].dataType.simpleString()
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -83,4 +86,4 @@ def compression_frame(docs: DataFrame, key_col: str = "doc_id",
             yield out
 
     return docs.select(key_col, text_col).mapInPandas(
-        batches, schema=_SCHEMA)
+        batches, schema=f"doc_id {key_type}, {_STATS}")

@@ -23,7 +23,7 @@ swap in ``xxhash64`` with one line.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import sinks
@@ -500,18 +500,16 @@ def cc_labels(edges: DataFrame) -> DataFrame:
     for _ in range(1, CC_ROUNDS + 1):
         nbmin = (sym.join(labels, sym.dst == labels.node)
                  .groupBy("src").agg(F.min("label").alias("nbmin")))
-        obs = Observation()
-        labels = (labels.join(nbmin, labels.node == nbmin.src, "left")
-                  .select(F.col("node"),
-                          F.least(F.col("label"),
-                                  F.coalesce(F.col("nbmin"), F.col("label")))
-                          .alias("label"),
-                          F.col("label").alias("old"))
-                  .observe(obs, F.sum((F.col("label") < F.col("old"))
-                                      .cast("long")).alias("changed"))
-                  .drop("old")
-                  .localCheckpoint(eager=True))
-        if not sinks.observed(obs, {"changed": 0})["changed"]:
+        labels, counts = sinks.observe(
+            labels.join(nbmin, labels.node == nbmin.src, "left")
+            .select(F.col("node"),
+                    F.least(F.col("label"),
+                            F.coalesce(F.col("nbmin"), F.col("label")))
+                    .alias("label"),
+                    F.col("label").alias("old")),
+            changed=sinks.n_true(F.col("label") < F.col("old")))
+        labels = labels.drop("old").localCheckpoint(eager=True)
+        if not counts()["changed"]:
             break
     return labels
 

@@ -98,9 +98,9 @@ def winnow_anchors(docs: DataFrame, k: int = K, w: int = W) -> DataFrame:
     (never whole-stage codegen — the r3-verdict lesson the veckernel
     module fixed for embedding dots), and this form is O(n_kgrams * w)
     struct builds per document on top of the per-k-gram md5. The
-    default anchor path is therefore :func:`winnow_anchors_arrow` — one
-    Arrow stage running the shared O(n) deque kernel; this form stays
-    as the declarative reference, pinned equal in tests.
+    operator's anchor path is therefore :func:`winnow_anchors_arrow` —
+    one Arrow stage running the shared O(n) deque kernel; this form
+    stays as the declarative reference, pinned equal in tests.
     """
     d = (docs.select("doc_id", _words_col().alias("wds"))
          .withColumn("n_w", F.size("wds"))
@@ -199,7 +199,6 @@ def _first_mismatch(a: str, b: str) -> str:
 
 def exact_substr_matched(docs: DataFrame, k: int = K, w: int = W,
                          min_run: int = MIN_RUN, ext: int = EXT_CAP,
-                         arrow: bool = True,
                          rounds: int = ROUNDS) -> DataFrame:
     """Verified duplicated-run intervals per non-canonical occurrence:
     ``(doc_id, start, end)`` word intervals (end exclusive), each an
@@ -222,19 +221,14 @@ def exact_substr_matched(docs: DataFrame, k: int = K, w: int = W,
     hash precede its first occurrence in (doc_id, pos) order; unmatched
     residue is KEPT (conservative — no false positives ever). Rounds
     run off one checkpointed bounded-window frame: the corpus is
-    scanned once and joined once, regardless of ``rounds``.
-
-    ``arrow=False`` swaps the anchor stage to the declarative HOF form
-    (same rows, slower — interpreted lambdas; the cross-check
-    reference)."""
+    scanned once and joined once, regardless of ``rounds``."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1 (0 would silently "
                          "disable dedup)")
-    anchor_fn = winnow_anchors_arrow if arrow else winnow_anchors
     # narrow (doc_id, h, pos) rows; checkpointed so the winnowing pass
     # runs ONCE (it feeds both sides of the decision self-join — the
     # dedup.py house rule for exactly this shape)
-    anchors = anchor_fn(docs, k, w).localCheckpoint(eager=False)
+    anchors = winnow_anchors_arrow(docs, k, w).localCheckpoint(eager=False)
     dec = (anchors.groupBy("h").agg(F.count("*").alias("n_occ"))
            .where(F.col("n_occ") >= 2).select("h"))
     flagged = anchors.join(dec, "h")
@@ -339,13 +333,12 @@ def _rewritten(docs: DataFrame, matched: DataFrame) -> DataFrame:
 
 def exact_substr_frame(docs: DataFrame, k: int = K, w: int = W,
                        min_run: int = MIN_RUN, ext: int = EXT_CAP,
-                       arrow: bool = True,
                        rounds: int = ROUNDS) -> DataFrame:
     """Per-document verdict frame: one row per input doc (grain
     preserved, NULL/empty included) with the duplicated-run audit and
     the md5 of the reassembled kept text."""
     out = _rewritten(docs, exact_substr_matched(docs, k, w, min_run,
-                                                ext, arrow, rounds))
+                                                ext, rounds))
     kept_text = F.array_join("kept", " ")
     return out.select(
         "doc_id",
@@ -359,14 +352,13 @@ def exact_substr_frame(docs: DataFrame, k: int = K, w: int = W,
 
 def exact_substr_text(docs: DataFrame, k: int = K, w: int = W,
                       min_run: int = MIN_RUN, ext: int = EXT_CAP,
-                      arrow: bool = True,
                       rounds: int = ROUNDS) -> DataFrame:
     """Content-rewrite form: ``(doc_id, text, n_dup_runs)`` with every
     non-canonical duplicated run removed (whitespace-normalized to
     single spaces by construction) — chains between the quality gate
     and the training sink like span_dedup_text."""
     out = _rewritten(docs, exact_substr_matched(docs, k, w, min_run,
-                                                ext, arrow, rounds))
+                                                ext, rounds))
     return out.select("doc_id", F.array_join("kept", " ").alias("text"),
                       F.size("mi").cast("int").alias("n_dup_runs"))
 

@@ -501,7 +501,7 @@ def write_training_shards(seqs: DataFrame, out_dir: str,
         seqs.sparkSession.read.parquet(f"{out}/data"))
     manifest.coalesce(1).write.mode("overwrite") \
         .parquet(f"{out}/manifest")
-    rows = manifest.collect()
+    rows = manifest.collect()       # driver collect bound: n_shards rows
     return {"shards": len(rows),
             "sequences": int(sum(r["n_sequences"] for r in rows)),
             "tokens": int(sum(r["n_tokens"] for r in rows))}

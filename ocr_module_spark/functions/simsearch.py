@@ -235,6 +235,7 @@ def train_ivf_centroids(e: DataFrame, k: int = NLIST,
     stay exactly what the bit-deterministic update produced (re-scaling
     would break the fixed-point bit-identity this function guarantees).
     """
+    # driver collect bound: k centroid rows
     cents = {r["vec_id"]: list(r["vec"]) for r in
              e.where(F.col("vec_id") < k).select("vec_id", "vec")
               .collect()}
@@ -243,6 +244,7 @@ def train_ivf_centroids(e: DataFrame, k: int = NLIST,
     dim = len(cents[0])
     for _ in range(rounds):
         assigned = ivf_assign(e, cents)
+        # driver collect bound: k x dim rows, one per (cid, pos)
         sums = (assigned
                 .select("cid", F.posexplode("vec").alias("pos", "val"))
                 .select("cid", "pos",
@@ -279,6 +281,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, no second scan, and the float→double cast happens exactly
     (numpy widening) without an interpreted transform."""
     e = _emb(spark, sf_dir)
+    # driver collect bound: NLIST centroid rows
     cents = {r["vec_id"]: list(r["vec"]) for r in
              e.where(F.col("vec_id") < NLIST)
               .select("vec_id", "vec").collect()}

@@ -68,7 +68,7 @@ import shutil
 import uuid
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks
@@ -119,14 +119,12 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
         old_fp = spark.createDataFrame([], "url string, fp string")
     # materialize the diff before anything overwrites its inputs; the
     # status counts ride on the same pass
-    diff_obs = Observation("refresh_diff")
-    diff = snapshot_diff(old_fp, new_fp, key="url").observe(
-        diff_obs, *[F.sum((F.col("status") == s).cast("long"))
-                    .alias(f"docs_{s}") for s in _STATUSES]) \
-        .localCheckpoint(eager=True)
-    counters: Dict = {"epoch": epoch}
-    counters.update(sinks.observed(
-        diff_obs, {f"docs_{s}": 0 for s in _STATUSES}))
+    diff, diff_counts = sinks.observe(
+        snapshot_diff(old_fp, new_fp, key="url"),
+        **{f"docs_{s}": sinks.n_true(F.col("status") == s)
+           for s in _STATUSES})
+    diff = diff.localCheckpoint(eager=True)
+    counters: Dict = {"epoch": epoch, **diff_counts()}
 
     # 3. re-extract only what the diff routed (added + changed); the
     # epoch sink keeps run_extraction's own lineage + resume semantics
@@ -151,23 +149,21 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
     # files and reads as an empty frame: nothing to dedup
     docs = _read_epoch_docs(spark, edir)
     dec, rows = dedup_increment(docs, _read_index(spark, state_dir))
-    dec_obs = Observation("refresh_dedup")
-    dec.withColumn("epoch", F.lit(epoch)) \
-        .observe(dec_obs, F.count(F.lit(1)).alias("dedup_docs"),
-                 F.sum(F.col("exact_dup").cast("long")).alias("dedup_exact"),
-                 F.sum(F.col("near_dup").cast("long")).alias("dedup_near"),
-                 F.sum(F.col("keep").cast("long")).alias("dedup_kept")) \
-        .write.mode("overwrite").parquet(
-            os.path.join(state_dir, "decisions", f"e{epoch:06d}"))
-    counters.update(sinks.observed(dec_obs, dict.fromkeys(
-        ("dedup_docs", "dedup_exact", "dedup_near", "dedup_kept"), 0)))
-    shard = rows.withColumn("epoch", F.lit(epoch))
-    shard_obs = Observation("refresh_shard")
-    shard.observe(shard_obs,
-                  F.count(F.lit(1)).alias("index_rows_appended")) \
-        .write.mode("overwrite").parquet(
-            os.path.join(state_dir, "index", f"e{epoch:06d}"))
-    counters.update(sinks.observed(shard_obs, {"index_rows_appended": 0}))
+    dec, dec_counts = sinks.observe(
+        dec.withColumn("epoch", F.lit(epoch)),
+        dedup_docs=F.count(F.lit(1)),
+        dedup_exact=sinks.n_true(F.col("exact_dup")),
+        dedup_near=sinks.n_true(F.col("near_dup")),
+        dedup_kept=sinks.n_true(F.col("keep")))
+    dec.write.mode("overwrite").parquet(
+        os.path.join(state_dir, "decisions", f"e{epoch:06d}"))
+    counters.update(dec_counts())
+    shard, shard_counts = sinks.observe(
+        rows.withColumn("epoch", F.lit(epoch)),
+        index_rows_appended=F.count(F.lit(1)))
+    shard.write.mode("overwrite").parquet(
+        os.path.join(state_dir, "index", f"e{epoch:06d}"))
+    counters.update(shard_counts())
 
     # 6. commit: fingerprints last-write-wins — the diff's new side, so
     # the snapshot's html is hashed once — then the marker
@@ -253,9 +249,8 @@ def compact_index(spark: SparkSession, state_dir: str,
     collapse on the canonical-URL key + optional epoch TTL). Rewrites
     the index as one compacted shard; the row counts before and after
     ride on the compaction's checkpoint and on its write."""
-    before = Observation("index_before")
-    index = _read_index(spark, state_dir).observe(
-        before, F.count(F.lit(1)).alias("index_rows_before"))
+    index, before = sinks.observe(_read_index(spark, state_dir),
+                                  index_rows_before=F.count(F.lit(1)))
     tomb = (_tombstones(spark, state_dir)
             .groupBy("url").agg(F.max("rm_epoch").alias("rm_epoch")))
     live = (index.join(tomb, index["doc_id"] == tomb["url"], "left")
@@ -270,12 +265,11 @@ def compact_index(spark: SparkSession, state_dir: str,
     # and the next compaction tolerate), never an empty index
     root = os.path.join(state_dir, "index")
     staged = os.path.join(root, f"compacted-{uuid.uuid4().hex}")
-    after = Observation("index_after")
-    compacted.observe(after, F.count(F.lit(1)).alias("index_rows_after")) \
-        .write.parquet(staged)
+    compacted, after = sinks.observe(compacted,
+                                     index_rows_after=F.count(F.lit(1)))
+    compacted.write.parquet(staged)
     for name in os.listdir(root):
         if name != os.path.basename(staged):
             shutil.rmtree(os.path.join(root, name))
     os.rename(staged, os.path.join(root, "compacted"))
-    return {**sinks.observed(before, {"index_rows_before": 0}),
-            **sinks.observed(after, {"index_rows_after": 0})}
+    return {**before(), **after()}

@@ -34,25 +34,44 @@ import json
 import os
 import time
 import uuid
-from typing import Dict, Optional
+from typing import Callable, Dict, Optional, Tuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import pipeline
 
 
-def observed(o: Observation, defaults: Dict) -> Dict:
-    """An Observation's counters as ints (NULL sums → 0). When the
+def observe(df: DataFrame, **aggs: Column
+            ) -> Tuple[DataFrame, Callable[[], Dict[str, int]]]:
+    """``df`` with the aggregates ``aggs`` observed on it, and
+    ``counts()``: ``{name: int}`` for every keyword, to read once an
+    action has run the returned frame. A NULL sum reads 0. When the
     observed plan held no rows (e.g. resume filtered the whole input),
     AQE can collapse it to an empty relation and the CollectMetrics row
     never materializes; Observation.get then fails JVM-side. Zero work
-    → zero counters: ``defaults``."""
-    try:
-        got = o.get
-    except Exception:
-        return dict(defaults)
-    return {k: (int(v) if v is not None else 0) for k, v in got.items()}
+    → every counter 0.
+
+    The node counts every time a plan runs it, and the Observation keeps
+    only the first run: put it directly under the write or eager
+    localCheckpoint that runs once (under a lazy checkpoint it reads
+    0), never on a frame two branches consume. Spark rejects DISTINCT
+    aggregates in observed metrics."""
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(n) for n, c in aggs.items()])
+
+    def counts() -> Dict[str, int]:
+        try:
+            got = obs.get
+        except Exception:
+            got = {}
+        return {n: int(got.get(n) or 0) for n in aggs}
+    return out, counts
+
+
+def n_true(cond: Column) -> Column:
+    """The number of rows where ``cond`` holds, as an aggregate."""
+    return F.sum(cond.cast("long"))
 
 
 def read_parquet_or_empty(spark: SparkSession, path: str,
@@ -166,11 +185,9 @@ def run_extraction_iceberg(spark: SparkSession, pages: DataFrame,
             "spark.sql.catalog.* conf (see sinks.py header), or use "
             "sink='parquet'")
     spark.sql(iceberg_create_sql(table))
-    obs = Observation("extract_metrics")
-    instrumented = pages.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes_in"))
+    instrumented, in_counts = observe(
+        pages, docs_in=F.count(F.lit(1)),
+        bytes_in=F.sum(F.coalesce(F.length("html"), F.lit(0))))
     batch_id = uuid.uuid4().hex[:16]
     t0 = time.time()
     out = (pipeline.extract(instrumented, num_partitions=num_partitions)
@@ -180,8 +197,7 @@ def run_extraction_iceberg(spark: SparkSession, pages: DataFrame,
     out.createOrReplaceTempView("_extract_updates")
     spark.sql(iceberg_merge_sql(table))
     metrics = {"batch_id": batch_id, "table": table,
-               "wall_sec": round(time.time() - t0, 3)}
-    metrics.update(observed(obs, {"docs_in": 0, "bytes_in": 0}))
+               "wall_sec": round(time.time() - t0, 3), **in_counts()}
     return metrics
 
 
@@ -252,12 +268,9 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         # resume: skip documents already committed (SURVEY.md §7.1 step 7)
         todo = pages.join(done, "url", "left_anti")
 
-    obs = Observation("extract_metrics")
-    instrumented = todo.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes_in"),
-    )
+    instrumented, in_counts = observe(
+        todo, docs_in=F.count(F.lit(1)),
+        bytes_in=F.sum(F.coalesce(F.length("html"), F.lit(0))))
     batch_id = uuid.uuid4().hex[:16]
     t0 = time.time()
     out = (pipeline.extract(instrumented, num_partitions=num_partitions,
@@ -266,39 +279,30 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
            # per-partition lineage: stamp the parse task's partition id
            # in-stage (narrow, zero cost) — see partition_lineage()
            .withColumn("part_id", F.spark_partition_id()))
-    out_obs = Observation("extract_out")
-    out = out.observe(
-        out_obs,
-        F.count(F.lit(1)).alias("docs_out"),
-        (F.max("part_id") + F.lit(1)).alias("n_partitions"),
-        F.sum(F.size("spans")).alias("nodes_classified"),
-        F.sum(F.length("text")).alias("bytes_text_out"),
-        F.sum(F.col("mismatch_flag").cast("long")).alias("docs_mismatched"),
-        F.sum(F.col("error").isNotNull().cast("long")).alias("docs_failed"),
+    path = F.col("parse_path")
+    out, out_counts = observe(
+        out,
+        docs_out=F.count(F.lit(1)),
+        n_partitions=F.max("part_id") + F.lit(1),
+        nodes_classified=F.sum(F.size("spans")),
+        bytes_text_out=F.sum(F.length("text")),
+        docs_mismatched=n_true(F.col("mismatch_flag")),
+        docs_failed=n_true(F.col("error").isNotNull()),
         # parse-path split (with docs_failed, every doc counted once):
         # at crawl scale a docs_parse_fallback jump is the earliest sign
         # the input drifted out of the fast subset (each fallback doc
         # parses ~1.5x slower)
-        F.sum((F.col("parse_path") == "fast").cast("long"))
-         .alias("docs_parse_fast"),
-        F.sum((F.col("parse_path") == "stdlib").cast("long"))
-         .alias("docs_parse_fallback"),
-        F.sum((F.col("parse_path") == "blocklist").cast("long"))
-         .alias("docs_parse_blocklist"),
-        F.sum((F.col("parse_path") == "empty").cast("long"))
-         .alias("docs_parse_empty"),
-    ).drop("parse_path")
+        docs_parse_fast=n_true(path == "fast"),
+        docs_parse_fallback=n_true(path == "stdlib"),
+        docs_parse_blocklist=n_true(path == "blocklist"),
+        docs_parse_empty=n_true(path == "empty"))
+    out = out.drop("parse_path")
     data_dir = os.path.join(out_dir, "data")
     out.write.mode("append").parquet(data_dir)
     wall = time.time() - t0
 
-    metrics = {"batch_id": batch_id, "wall_sec": round(wall, 3)}
-    metrics.update(observed(obs, {"docs_in": 0, "bytes_in": 0}))
-    metrics.update(observed(out_obs, {
-        "docs_out": 0, "n_partitions": 0, "nodes_classified": 0,
-        "bytes_text_out": 0, "docs_mismatched": 0, "docs_failed": 0,
-        "docs_parse_fast": 0, "docs_parse_fallback": 0,
-        "docs_parse_blocklist": 0, "docs_parse_empty": 0}))
+    metrics = {"batch_id": batch_id, "wall_sec": round(wall, 3),
+               **in_counts(), **out_counts()}
 
     manifest_dir = os.path.join(out_dir, "_manifest")
     os.makedirs(manifest_dir, exist_ok=True)

@@ -686,6 +686,7 @@ def write_wet(df: DataFrame, out_dir: str, n_files: int = 0) -> dict:
             [{"wet_file": path, "n_records": n,
               "n_bytes": os.path.getsize(path)}])
 
+    # driver collect bound: one row per WET file written
     manifest = src.mapInPandas(gen, acc_schema).collect()
     spark = df.sparkSession
     spark.createDataFrame(manifest or [], acc_schema) \

@@ -53,6 +53,18 @@ def test_matches_kernel_rowwise(spark):
         assert got[k] == compression_stats_str(s), k
 
 
+def test_string_keys_pass_through(spark):
+    """The curate CLI keys documents by url: a string key comes back
+    typed as the input's, with the same per-doc stats."""
+    df = spark.createDataFrame(
+        [(f"u/{k}", v) for k, v in PLANTED.items()], "url string, text string")
+    out = compression_frame(df, key_col="url")
+    assert out.schema["doc_id"].dataType.simpleString() == "string"
+    got = {r["doc_id"]: tuple(r)[1:] for r in out.collect()}
+    assert got == {f"u/{k}": compression_stats_str(s)
+                   for k, s in PLANTED.items()}
+
+
 def test_complementary_to_gopher_repetition(spark):
     """The zlib signal and the Gopher dup-ngram rules overlap but are
     not the same gate: a doc whose repetition lives at long range (a

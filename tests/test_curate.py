@@ -594,3 +594,134 @@ def test_warc_container_to_loader_end_to_end(spark, tmp_path, monkeypatch,
     wtext = {r["url"]: r["text"] for r in wet.collect()}
     for r in curated.select("url", "text").collect():
         assert wtext[r["url"]] == r["text"]
+
+
+def _sql_actions(spark, after: int) -> list:
+    """(execution id, action, call site) of every SQL execution newer
+    than ``after``, read off the SQL status store (descriptions read
+    ``'<action> at <call site>'``)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = (spark._jsparkSession.sharedState().statusStore()
+          .executionsList().iterator())
+    out = []
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > after:
+            action, _, site = e.description().partition(" at ")
+            out.append((e.executionId(), action, site))
+    return out
+
+
+def test_cli_counters_ride_on_the_writes(spark, tmp_path, monkeypatch,
+                                         capsys):
+    """The CLI with every text, graph, mix, split, training-sink and
+    annotation stage on: each counter equals what re-reading its
+    artifact gives, and the only counting actions the run spends are
+    the bounded ones tools/curate.py names — everything else rides on
+    the writes and eager checkpoints through sinks.observe."""
+    import importlib.util
+    import json
+    import pathlib
+
+    from ocr_module_spark import pipeline
+    from ocr_module_spark.sources import warc as W
+
+    recs = [{"url": r["url"], "warc_ts": r["warc_ts"], "html": r["html"]}
+            for r in corpus.rows(200)]
+    (tmp_path / "crawl").mkdir()
+    (tmp_path / "crawl" / "part-00000.warc.gz").write_bytes(
+        W.build_warc_gz(recs)[0])
+    bench_p = str(tmp_path / "bench.parquet")
+    (pipeline.extract(corpus.pages_df(spark, 200))
+     .where(F.xxhash64("url") % 11 == 3)
+     .select(F.xxhash64("url").alias("doc_id"), "text")
+     .write.parquet(bench_p))
+    words = tmp_path / "badwords.txt"
+    words.write_text("lorem\nipsum\ncrawler\n")
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "curate_cli", repo / "tools" / "curate.py")
+    cli = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cli)
+    out = str(tmp_path / "out")
+    monkeypatch.setattr("sys.argv", [
+        "curate.py", "--input", str(tmp_path / "crawl"),
+        "--input-format", "warc", "--bench", bench_p, "--output", out,
+        "--strip-boilerplate", "--line-filter", "--span-dedup",
+        "--link-graph", "--host-stats", "--budget-mix", "--dsir", "20",
+        "--split", "--mixture", "20000", "--pack", "64", "--shards", "4",
+        "--train-bpe", "4", "--encode-bpe", "--embed", "--lm-tiers",
+        "--badwords", str(words), "--datacard", "--wet",
+        "--wet-files", "2", "--compress-stats"])
+    seen = max([i for i, _, _ in _sql_actions(spark, -1)], default=-1)
+    assert cli.main() == 0
+    acts = _sql_actions(spark, seen)
+    counters = json.loads(
+        capsys.readouterr().out.strip().splitlines()[-1])
+
+    def sites(action):
+        return [s for _, a, s in acts if a == action]
+    # stage_counters' one aggregation
+    assert len(sites("first")) == 1
+    assert "ocr_module_spark/curate.py" in sites("first")[0]
+    # host_centrality's node count and the --line-filter doc_drop census
+    assert len(sites("count")) == 2
+    # the --split census and the shard manifest; the engine's own
+    # bounded collects (BPE, WET and shard manifests) are not the CLI's
+    assert len([s for s in sites("collect")
+                if "tools/curate.py" in s]) == 2
+
+    def n(part, where="true"):
+        return spark.read.parquet(f"{out}/{part}").where(where).count()
+
+    def total(part, expr):
+        return spark.read.parquet(f"{out}/{part}") \
+            .selectExpr(f"coalesce(sum({expr}), 0)").first()[0]
+
+    per_shard = [r["count"] for r in spark.read.parquet(f"{out}/shards")
+                 .groupBy("shard_id").count().collect()]
+    want = {
+        "docs_extracted": n("audit"),
+        "docs_kept": n("audit", "kept"),
+        "dropped_quality": n("audit", "NOT quality_keep"),
+        "graph_hosts": n("hostgraph"),
+        "hosts_blocked": n("hosts", "blocked"),
+        "docs_mixed": n("mix"),
+        "tokens_mixed": total("mix", "n_tokens"),
+        "docs_dsir_selected": n("dsir"),
+        "wet_files": n("wet/manifest"),
+        "wet_records": total("wet/manifest", "n_records"),
+        "docs_embedded": n("embeddings"),
+        "docs_too_repetitive": n("compress_stats", "too_repetitive"),
+        "docs_incompressible": n("compress_stats", "incompressible"),
+        "docs_ppl_head": n("lm_tiers", "ppl_tier = 'head'"),
+        "docs_ppl_middle": n("lm_tiers", "ppl_tier = 'middle'"),
+        "docs_ppl_tail": n("lm_tiers", "ppl_tier = 'tail'"),
+        "lm_model_rows": n("lm_model"),
+        "docs_badwords_flagged": n("badwords", "bad_flag"),
+        "datacard_rows": n("datacard"),
+        "datacard_example_rows": n("datacard_examples"),
+        "docs_train": n("curated", "split = 'train'"),
+        "docs_val": n("curated", "split = 'val'"),
+        "docs_test": n("curated", "split = 'test'"),
+        "docs_mixture_excluded": n("curated", "split = 'train'")
+        - n("mixture"),
+        "docs_mixture": n("mixture"),
+        "docs_upsampled": n("mixture", "n_repeats >= 2"),
+        "docs_subsampled_out": n("mixture", "n_repeats = 0"),
+        "tokens_realized": total("mixture", "n_tokens * n_repeats"),
+        "sequences_packed": spark.read.parquet(f"{out}/packs")
+        .select("url_host", "seq_no").distinct().count(),
+        "tokens_packed": total("packs", "tok_end - tok_start"),
+        "shards": len(per_shard),
+        "shard_sequences_min": min(per_shard),
+        "shard_sequences_max": max(per_shard),
+        "bpe_merges": n("bpe_merges"),
+        "bpe_tokens_total": total("token_ids", "n_bpe"),
+        "bpe_sequences_packed": n("packs_bpe"),
+        "bpe_shards": n("shards_bpe/manifest"),
+        "bpe_shard_tokens": total("shards_bpe/manifest", "n_tokens"),
+    }
+    assert {k: counters[k] for k in want} == want
+    assert counters["docs_kept"] > 0 and counters["sequences_packed"] > 0

@@ -281,12 +281,31 @@ def main() -> int:
                  "re-specified")
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
     spark = SparkSession.builder.appName("curate").getOrCreate()
-    from ocr_module_spark.curate import curate, stage_counters
+    from ocr_module_spark.curate import (curate, curated_from_audit,
+                                         stage_counters)
     from ocr_module_spark.deploy import ensure_pyfiles
+    from ocr_module_spark.sinks import n_true, observe
     ensure_pyfiles(spark)
 
-    from ocr_module_spark.curate import curated_from_audit
+    # every counter rides on the write or eager checkpoint that produces
+    # its artifact (sinks.observe); the driver actions left are named
+    # with their bound where they run
+    rows = F.count(F.lit(1))
+
+    def checkpoint(df, **aggs):
+        """``df`` materialized once, ``aggs`` counted on that pass."""
+        df, counts = observe(df, **aggs)
+        df = df.localCheckpoint(eager=True)
+        counters.update(counts())
+        return df
+
+    def write(df, part, **aggs):
+        """``df`` to ``<out>/<part>``, ``aggs`` counted on the write."""
+        df, counts = observe(df, **aggs)
+        df.write.mode("overwrite").parquet(f"{out}/{part}")
+        counters.update(counts())
 
     out = args.output.rstrip("/")
     if args.resume:
@@ -300,7 +319,7 @@ def main() -> int:
                 ap.error(f"--resume: {out}/{part} missing (run the "
                          "full pipeline once first)")
         audit = spark.read.parquet(f"{out}/audit")
-        counters = stage_counters(audit)
+        counters = stage_counters(audit)    # one aggregation job
         counters["resumed"] = True
     else:
         if args.input_format == "warc":
@@ -317,43 +336,39 @@ def main() -> int:
         # sinks read the checkpoint (deriving curated from the original plan
         # would re-run extraction/dedup/decontamination a second time)
         audit = audit.localCheckpoint(eager=True)
-        # the boilerplate flag census is small (one row per host) but COSTS a
-        # full exploded-lines aggregation — compute it once, checkpoint it,
-        # and let the counter agg, the line-filter census, and the curated
-        # write below all consume that one materialization
+        counters = stage_counters(audit)    # one aggregation job
+        # the boilerplate flag frame is small (one row per host) but COSTS a
+        # full exploded-lines aggregation — compute it once, checkpoint it
+        # (its counters ride on that checkpoint), and let the line-filter
+        # census and the curated write below consume that materialization
         boiler_flags = None
         if args.strip_boilerplate:
             from ocr_module_spark.functions.linededup import flagged_lines
             from ocr_module_spark.pipeline import with_host
-            boiler_flags = flagged_lines(
-                with_host(audit.where("kept").select("url", "text")),
-                group_col="url_host", key_col="url") \
-                .localCheckpoint(eager=True)
+            boiler_flags = checkpoint(
+                flagged_lines(
+                    with_host(audit.where("kept").select("url", "text")),
+                    group_col="url_host", key_col="url"),
+                boiler_hosts=rows,
+                boiler_lines_flagged=F.sum(F.size("boiler_lines")))
         curated = curated_from_audit(audit, scrub=args.scrub_pii,
                                      span_dedup=args.span_dedup,
                                      strip_boiler=args.strip_boilerplate,
                                      line_filter=args.line_filter,
                                      exact_substr=args.exact_substr,
                                      boiler_flags=boiler_flags)
-
-        counters = stage_counters(audit)
-        if args.strip_boilerplate:
-            from pyspark.sql import functions as F
-            agg = boiler_flags.agg(
-                F.count("*").alias("hosts"),
-                F.coalesce(F.sum(F.size("boiler_lines")), F.lit(0))
-                .alias("lines")).first()
-            counters["boiler_hosts"] = int(agg["hosts"])
-            counters["boiler_lines_flagged"] = int(agg["lines"])
         if args.line_filter:
-            # doc_drop census over the kept docs (zero-exchange projection
-            # plus the checkpointed flag join when --strip-boilerplate is
-            # also on — the same text the filter stage itself sees)
-            from ocr_module_spark.curate import curated_from_audit as _cfa
+            # doc_drop census: one count job over the kept docs
+            # (zero-exchange projection plus the checkpointed flag join
+            # when --strip-boilerplate is also on — the same text the
+            # filter stage itself sees). It cannot ride on the curated
+            # write: the filter runs inside curated_from_audit, and the
+            # curated frame also feeds --dsir's selection
             from ocr_module_spark.functions.linededup import (
                 line_quality_filter)
-            base = _cfa(audit, strip_boiler=args.strip_boilerplate,
-                        boiler_flags=boiler_flags).select("url", "text")
+            base = curated_from_audit(
+                audit, strip_boiler=args.strip_boilerplate,
+                boiler_flags=boiler_flags).select("url", "text")
             counters["docs_line_dropped"] = int(
                 line_quality_filter(base).where("doc_drop").count())
         if args.link_graph:
@@ -362,43 +377,34 @@ def main() -> int:
             # longs only
             from ocr_module_spark.functions.linkgraph import (
                 extract_links, host_centrality, host_link_graph)
-            graph = host_link_graph(extract_links(pages)) \
-                .localCheckpoint(eager=True)
-            rank = host_centrality(graph)
-            rank.write.mode("overwrite").parquet(f"{out}/hostgraph")
-            counters["graph_edges"] = graph.count()
-            counters["graph_hosts"] = int(
-                spark.read.parquet(f"{out}/hostgraph").count())
+            graph = checkpoint(host_link_graph(extract_links(pages)),
+                               graph_edges=rows)
+            write(host_centrality(graph), "hostgraph", graph_hosts=rows)
         if args.host_stats:
             from ocr_module_spark.functions.hostrep import host_stats_from_audit
-            hosts = host_stats_from_audit(audit)
-            hosts.write.mode("overwrite").parquet(f"{out}/hosts")
-            counters["hosts_blocked"] = int(
-                spark.read.parquet(f"{out}/hosts").where("blocked").count())
+            write(host_stats_from_audit(audit), "hosts",
+                  hosts_blocked=n_true(F.col("blocked")))
         if args.budget_mix:
             from ocr_module_spark.curate import mix_from_audit
-            mix = mix_from_audit(audit).localCheckpoint(eager=True)
+            mix = checkpoint(mix_from_audit(audit), docs_mixed=rows,
+                             tokens_mixed=F.sum("n_tokens"))
             mix.write.mode("overwrite").parquet(f"{out}/mix")
             # decision frame joined back on url — the text column never
             # rides the mix's window shuffles
             curated = curated.join(mix.select("url"), "url")
-            agg = mix.selectExpr("count(*) AS docs_mixed",
-                                 "coalesce(sum(n_tokens), 0) AS tokens_mixed") \
-                .first()
-            counters["docs_mixed"] = int(agg["docs_mixed"])
-            counters["tokens_mixed"] = int(agg["tokens_mixed"])
         if args.dsir > 0:
             from ocr_module_spark.curate import dsir_from_curated
-            sel = dsir_from_curated(curated, pages, args.dsir_target,
-                                    args.dsir).localCheckpoint(eager=True)
+            sel = checkpoint(dsir_from_curated(curated, pages,
+                                               args.dsir_target, args.dsir),
+                             docs_dsir_selected=rows)
             sel.write.mode("overwrite").parquet(f"{out}/dsir")
             # decision frame joined back on url, same shape as --budget-mix
             curated = curated.join(sel.select("url"), "url")
-            counters["docs_dsir_selected"] = sel.count()
         if args.split:
             from ocr_module_spark.curate import split_from_curated
             curated = split_from_curated(curated)
         cur = curated if args.coalesce <= 0 else curated.coalesce(args.coalesce)
+        cur, curated_counts = observe(cur, docs=rows)
         cur.write.mode("overwrite").parquet(f"{out}/curated")
     if args.wet:
         # export off the materialized parquet, not the curation plan —
@@ -410,36 +416,23 @@ def main() -> int:
         counters["wet_files"] = acc["wet_files"]
         counters["wet_records"] = acc["records"]
     if args.embed:
-        from pyspark.sql import functions as F
-
         from ocr_module_spark.functions.embed import embed_hashing
-        emb = embed_hashing(
-            spark.read.parquet(f"{out}/curated")
-            .select(F.col("url").alias("doc_id"), "text")) \
-            .withColumnRenamed("doc_id", "url")
-        emb.write.mode("overwrite").parquet(f"{out}/embeddings")
-        counters["docs_embedded"] = \
-            spark.read.parquet(f"{out}/embeddings").count()
+        write(embed_hashing(
+                  spark.read.parquet(f"{out}/curated")
+                  .select(F.col("url").alias("doc_id"), "text"))
+              .withColumnRenamed("doc_id", "url"), "embeddings",
+              docs_embedded=rows)
 
     if args.compress_stats:
-        from pyspark.sql import functions as F
-
         from ocr_module_spark.functions.compress import compression_frame
-        cs = compression_frame(
-            spark.read.parquet(f"{out}/curated")
-            .select(F.col("url").alias("doc_id"), "text")) \
-            .withColumnRenamed("doc_id", "url")
-        cs.write.mode("overwrite").parquet(f"{out}/compress_stats")
-        agg = spark.read.parquet(f"{out}/compress_stats").agg(
-            F.coalesce(F.sum(F.col("too_repetitive").cast("long")),
-                       F.lit(0)).alias("r"),
-            F.coalesce(F.sum(F.col("incompressible").cast("long")),
-                       F.lit(0)).alias("i")).first()
-        counters["docs_too_repetitive"] = int(agg["r"])
-        counters["docs_incompressible"] = int(agg["i"])
+        write(compression_frame(
+                  spark.read.parquet(f"{out}/curated")
+                  .select(F.col("url").alias("doc_id"), "text"))
+              .withColumnRenamed("doc_id", "url"), "compress_stats",
+              docs_too_repetitive=n_true(F.col("too_repetitive")),
+              docs_incompressible=n_true(F.col("incompressible")))
 
     if args.lm_tiers:
-        from pyspark.sql import functions as F
         from ocr_module_spark.functions.ngramlm import (
             score_ngram_lm, train_ngram_lm, with_ppl_tiers)
         # train on the curated output itself — post-gate text IS the
@@ -448,7 +441,7 @@ def main() -> int:
         # read one materialization instead of re-running the trainer
         base = spark.read.parquet(f"{out}/curated") \
             .select(F.col("url").alias("doc_id"), "text")
-        model = train_ngram_lm(base).localCheckpoint(eager=True)
+        model = checkpoint(train_ngram_lm(base), lm_model_rows=rows)
         model.write.mode("overwrite").parquet(f"{out}/lm_model")
         scored = score_ngram_lm(base, model)
         if not args.resume:
@@ -458,33 +451,26 @@ def main() -> int:
         else:
             # the stored artifact keeps no crawl lang — global terciles
             scored = scored.withColumn("lang", F.lit(None).cast("string"))
-        tiers = with_ppl_tiers(scored).withColumnRenamed("doc_id", "url")
-        tiers.write.mode("overwrite").parquet(f"{out}/lm_tiers")
-        for r in (spark.read.parquet(f"{out}/lm_tiers")
-                  .groupBy("ppl_tier").count().collect()):
-            counters[f"docs_ppl_{r['ppl_tier']}"] = int(r["count"])
-        counters["lm_model_rows"] = model.count()
+        # every tier is a key, 0 when empty (the counters line is
+        # diffed across runs)
+        write(with_ppl_tiers(scored).withColumnRenamed("doc_id", "url"),
+              "lm_tiers",
+              **{f"docs_ppl_{t}": n_true(F.col("ppl_tier") == t)
+                 for t in ("head", "middle", "tail")})
 
     if args.badwords:
-        from pyspark.sql import functions as F
-
         from ocr_module_spark.functions.badwords import badwords_flags
         with open(args.badwords, encoding="utf-8") as fh:
             words = sorted({w.strip().lower()
                             for w in fh if w.strip()})
-        bw = badwords_flags(
-            spark.read.parquet(f"{out}/curated").select("url", "text"),
-            words, id_col="url")
-        bw.write.mode("overwrite").parquet(f"{out}/badwords")
-        counters["docs_badwords_flagged"] = int(
-            spark.read.parquet(f"{out}/badwords")
-            .agg(F.coalesce(F.sum(F.col("bad_flag").cast("long")),
-                            F.lit(0))).first()[0])
+        write(badwords_flags(
+                  spark.read.parquet(f"{out}/curated").select("url", "text"),
+                  words, id_col="url"), "badwords",
+              docs_badwords_flagged=n_true(F.col("bad_flag")))
 
     if args.datacard:
-        from pyspark.sql import functions as F
-
-        from ocr_module_spark.functions.datacard import corpus_datacard
+        from ocr_module_spark.functions.datacard import (
+            corpus_datacard, datacard_exemplars)
         from ocr_module_spark.pipeline import with_host
         base = with_host(spark.read.parquet(f"{out}/curated")
                          .select("url", "text"))
@@ -493,20 +479,14 @@ def main() -> int:
         else:
             # the stored artifact keeps no crawl lang — single 'und' row
             base = base.withColumn("lang", F.lit(None).cast("string"))
-        card = corpus_datacard(base, lang_col="lang",
-                               host_col="url_host")
-        card.write.mode("overwrite").parquet(f"{out}/datacard")
-        counters["datacard_rows"] = \
-            spark.read.parquet(f"{out}/datacard").count()
+        write(corpus_datacard(base, lang_col="lang", host_col="url_host"),
+              "datacard", datacard_rows=rows)
         # the card's "examples" column: k deterministic exemplar docs
         # per card group, url-keyed (same hash-lottery family as the
         # sampling/packing keys)
-        from ocr_module_spark.functions.datacard import datacard_exemplars
-        ex = (datacard_exemplars(base, lang_col="lang", id_col="url")
-              .withColumnRenamed("doc_id", "url"))
-        ex.write.mode("overwrite").parquet(f"{out}/datacard_examples")
-        counters["datacard_example_rows"] = \
-            spark.read.parquet(f"{out}/datacard_examples").count()
+        write(datacard_exemplars(base, lang_col="lang", id_col="url")
+              .withColumnRenamed("doc_id", "url"), "datacard_examples",
+              datacard_example_rows=rows)
 
     # every artifact a trainer consumes comes from this frame: the full
     # curated corpus, or its train split when --split is on (val/test
@@ -523,32 +503,32 @@ def main() -> int:
         # missing key (the counters line is diffed across runs)
         for s in ("train", "val", "test"):
             counters[f"docs_{s}"] = 0
+        # driver collect bound: 3 rows. A census, not an observe:
+        # --resume rewrites no curated output it could ride on
         for r in train.groupBy("split").count().collect():
             counters[f"docs_{r['split']}"] = int(r["count"])
         train = train.where("split = 'train'")
     if args.mixture > 0:
         from ocr_module_spark.curate import mixture_from_curated
-        mixt = mixture_from_curated(train, args.mixture) \
-            .localCheckpoint(eager=True)
+        mixt = checkpoint(
+            mixture_from_curated(train, args.mixture), docs_mixture=rows,
+            docs_upsampled=n_true(F.col("n_repeats") >= 2),
+            docs_subsampled_out=n_true(F.col("n_repeats") == 0),
+            tokens_realized=F.sum(F.col("n_tokens") * F.col("n_repeats")))
         mixt.write.mode("overwrite").parquet(f"{out}/mixture")
+        if args.split:
+            n_train = counters["docs_train"]
+        elif args.resume:
+            n_train = train.count()   # one job: no curated write to ride on
+        else:
+            n_train = curated_counts()["docs"]
         # docs the mixture never weighs (tier 'low' on the EMITTED text,
         # or zero tokens) — visible, not silent: with --scrub-pii or
         # --span-dedup the emitted text can tier differently than the
         # raw text the quality gate saw (deliberate: the mixture weighs
         # what the trainer will actually see)
         counters["docs_mixture_excluded"] = \
-            int(train.count()) - int(mixt.count())
-        agg = mixt.selectExpr(
-            "count(*) AS docs_mixture",
-            "coalesce(sum(CASE WHEN n_repeats >= 2 THEN 1 END), 0)"
-            " AS docs_upsampled",
-            "coalesce(sum(CASE WHEN n_repeats = 0 THEN 1 END), 0)"
-            " AS docs_subsampled_out",
-            "coalesce(sum(n_tokens * n_repeats), 0) AS tokens_realized") \
-            .first()
-        for k in ("docs_mixture", "docs_upsampled",
-                  "docs_subsampled_out", "tokens_realized"):
-            counters[k] = int(agg[k])
+            n_train - counters["docs_mixture"]
     if args.pack > 0:
         # packing reads only (url, n_tokens) of the final curated frame
         # (post mix restriction / span dedup / split), never the text;
@@ -562,19 +542,13 @@ def main() -> int:
         else:
             plan = pack_plan_from_curated(
                 train, args.pack, salt_buckets=args.pack_salt)
-        plan = plan.localCheckpoint(eager=True)
+        # every sequence (url_host[, pack_salt], seq_no) has exactly one
+        # slice at offset 0 — the count an observe can take (it rejects
+        # DISTINCT aggregates)
+        plan = checkpoint(
+            plan, sequences_packed=n_true(F.col("seq_off") == 0),
+            tokens_packed=F.sum(F.col("tok_end") - F.col("tok_start")))
         plan.write.mode("overwrite").parquet(f"{out}/packs")
-        # sequence identity is (url_host[, pack_salt], seq_no): seq_no
-        # restarts per salt bucket, so the salt must ride the distinct
-        # key or salted runs undercount (ADVICE r3)
-        seq_key = "url_host || '#' || seq_no" if args.pack_salt <= 0 else \
-            "url_host || '#' || pack_salt || '#' || seq_no"
-        agg = plan.selectExpr(
-            f"count(DISTINCT {seq_key}) AS sequences_packed",
-            "coalesce(sum(tok_end - tok_start), 0) AS tokens_packed") \
-            .first()
-        counters["sequences_packed"] = int(agg["sequences_packed"])
-        counters["tokens_packed"] = int(agg["tokens_packed"])
         if args.shards > 0:
             from ocr_module_spark.curate import shards_from_pack_plan
             from ocr_module_spark.functions.packing import shard_manifest
@@ -582,6 +556,8 @@ def main() -> int:
                 plan, args.shards, salted=args.pack_salt > 0) \
                 .localCheckpoint(eager=True)
             sharded.write.mode("overwrite").parquet(f"{out}/shards")
+            # driver collect bound: n_shards rows (min/max over groups
+            # cannot be observed)
             man = shard_manifest(sharded).collect()
             counters["shards"] = len(man)
             counters["shard_sequences_min"] = \
@@ -609,12 +585,9 @@ def main() -> int:
                                                         packed_bpe_sequences)
             from ocr_module_spark.pipeline import with_host
             vocab = bpe_vocab(corpus_alphabet(cur_docs), merges)
-            enc = encode_corpus(cur_docs, merges, vocab) \
-                .withColumnRenamed("doc_id", "url")
-            enc.write.mode("overwrite").parquet(f"{out}/token_ids")
-            stats = spark.read.parquet(f"{out}/token_ids") \
-                .selectExpr("coalesce(sum(n_bpe), 0) AS n").first()
-            counters["bpe_tokens_total"] = int(stats["n"])
+            write(encode_corpus(cur_docs, merges, vocab)
+                  .withColumnRenamed("doc_id", "url"), "token_ids",
+                  bpe_tokens_total=F.sum("n_bpe"))
             from ocr_module_spark.functions.bpe import vocab_size
             counters["bpe_vocab_size"] = vocab_size(vocab)
             if args.pack > 0:
@@ -623,15 +596,13 @@ def main() -> int:
                 # id arrays per training pass)
                 rep = None
                 if args.mixture > 0:
-                    from pyspark.sql import functions as F
                     rep = mixt.select(F.col("url").alias("doc_id"),
                                       "n_repeats")
-                seqs = packed_bpe_sequences(
-                    with_host(cur_docs, "doc_id"), merges, vocab,
-                    seq_len=args.pack, key_col="url_host", repeats=rep)
-                seqs.write.mode("overwrite").parquet(f"{out}/packs_bpe")
-                nseq = spark.read.parquet(f"{out}/packs_bpe").count()
-                counters["bpe_sequences_packed"] = int(nseq)
+                write(packed_bpe_sequences(
+                          with_host(cur_docs, "doc_id"), merges, vocab,
+                          seq_len=args.pack, key_col="url_host",
+                          repeats=rep),
+                      "packs_bpe", bpe_sequences_packed=rows)
                 if args.shards > 0:
                     # the data-loader files themselves: token-ID
                     # sequences partitioned by shard, pos-ordered
