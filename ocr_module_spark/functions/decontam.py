@@ -6,9 +6,10 @@ collision and by embedding nearest-neighbor).
 Both operators here are *joins with a many-row probe side* — the
 generalization the round-2 verdict flagged as the one missing canonical
 LLM-curation operator (the previous suite could only answer "neighbors of
-vector 0"). The machinery is the suite's existing LSH keys
-(`dedup.emb_candidate_pairs` band/bucket sign keys, `dedup`'s word
-shingles); what's new is composing them with a query SET:
+vector 0"). The machinery is the suite's shared LSH key builders — the
+sign-LSH bucket (``simsearch._sign_bucket`` / ``_sql_sign_bucket``), the
+band unpivot (``dedup._band_unpivot`` / ``_sql_stacked``) and ``dedup``'s
+word shingles; what's new is composing them with a query SET:
 
 * ``decon_ngram_flags`` — shingle-collision flags per corpus doc against
   a benchmark set: explode distinct word shingles on both sides, ONE
@@ -37,8 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .dedup import (EMB_BANDS, EMB_BAND_BITS, NGRAM_N, shingle_sql_duck,
-                    shingle_sql_spark)
+from .dedup import (EMB_BANDS, EMB_BAND_BITS, NGRAM_N, _band_unpivot,
+                    _sql_stacked, shingle_sql_duck, shingle_sql_spark)
+from .simsearch import _emb, _sign_bucket, _sql_sign_bucket
 
 BENCH_MOD = 17              # benchmark membership: id % BENCH_MOD == BENCH_RES
 BENCH_RES = 3
@@ -156,19 +158,15 @@ WHERE d.doc_id % {BENCH_MOD} <> {BENCH_RES}
 
 def _stacked_bucket_keys(e: DataFrame, id_alias: str,
                          vec_alias: str) -> DataFrame:
-    """(band, bucket, id, vec): every vector under its EMB_BANDS banded
+    """(id, vec, band, key): every vector under its EMB_BANDS banded
     sign-LSH keys — dedup.emb_candidate_pairs' key scheme reused as a
     JOIN key for a many-row query side."""
-    from .simsearch import _sign_bucket
     keyed = e.select(
         F.col("vec_id").alias(id_alias), F.col("vec").alias(vec_alias),
         *[_sign_bucket("vec", EMB_BAND_BITS, k * EMB_BAND_BITS).alias(f"b{k}")
           for k in range(EMB_BANDS)])
-    return keyed.selectExpr(
-        id_alias, vec_alias,
-        "stack({n}, {cols}) as (band, bucket)".format(
-            n=EMB_BANDS,
-            cols=", ".join(f"{k}, b{k}" for k in range(EMB_BANDS))))
+    return _band_unpivot(keyed, [f"b{k}" for k in range(EMB_BANDS)],
+                         (id_alias, vec_alias))
 
 
 def q_decon_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,7 +176,7 @@ def q_decon_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a near-dup of eval data) and the production shape of similarity
     search (a query TABLE, not one hardwired vector).
 
-    One equi-join on (band, bucket): the benchmark side (tiny at scale)
+    One equi-join on (band, key): the benchmark side (tiny at scale)
     is broadcast, so the 10^12-row corpus is never shuffled for the
     join; candidates = bucket collisions only (never all-pairs, no
     BNLJ — plan-asserted), deduped across bands, exact dot on candidates,
@@ -186,14 +184,13 @@ def q_decon_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     with vec_id tie-break — FP-stable across engines (the dots run in
     the numpy fold kernel, bit-identical to the HOF fold; the rounding
     stays JVM-side)."""
-    from .simsearch import _emb
     from .veckernel import fold_dots
     e = _emb(spark, sf_dir)
     corpus = _stacked_bucket_keys(e.where(~_is_bench("vec_id")),
                                   "vec_id", "vec")
     queries = _stacked_bucket_keys(e.where(_is_bench("vec_id")),
                                    "query_id", "qvec")
-    paired = corpus.join(F.broadcast(queries), ["band", "bucket"])
+    paired = corpus.join(F.broadcast(queries), ["band", "key"])
     cands = (fold_dots(paired, [("vec", "qvec", "_d")])
              .select("query_id", "vec_id",
                      F.round("_d", 4).alias("dot"))
@@ -206,27 +203,19 @@ def q_decon_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "rank", "vec_id", "dot"))
 
 
-def _sql_bucket(offset: int, bits: int) -> str:
-    return "(" + " + ".join(
-        f"CASE WHEN embedding[{offset + k + 1}] >= 0 THEN {2 ** k} ELSE 0 END"
-        for k in range(bits)) + ")"
-
-
 SQL_DECON_EMBEDDING_KNN = (
     "WITH keyed AS (SELECT vec_id, embedding::DOUBLE[] AS v, "
     + ", ".join(
-        f"{_sql_bucket(k * EMB_BAND_BITS, EMB_BAND_BITS)} AS b{k}"
+        f"{_sql_sign_bucket(k * EMB_BAND_BITS, EMB_BAND_BITS)} AS b{k}"
         for k in range(EMB_BANDS))
     + " FROM embeddings),\n"
     "stacked AS ("
-    + " UNION ALL ".join(
-        f"SELECT vec_id, v, {k} AS band, b{k} AS bucket FROM keyed"
-        for k in range(EMB_BANDS))
+    + _sql_stacked("keyed", [f"b{k}" for k in range(EMB_BANDS)], "vec_id, v")
     + "),\n"
     + f"""cands AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id,
          round(list_dot_product(c.v, q.v), 4) AS dot
-  FROM stacked c JOIN stacked q USING (band, bucket)
+  FROM stacked c JOIN stacked q USING (band, key)
   WHERE q.vec_id % {BENCH_MOD} = {BENCH_RES}
     AND c.vec_id % {BENCH_MOD} <> {BENCH_RES}
 ), ranked AS (

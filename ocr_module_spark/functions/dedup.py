@@ -17,8 +17,14 @@ Scale notes (the point of each design):
   only portable hex arithmetic, so the DuckDB oracle is bit-exact.
 
 All hashing is md5-hex (identical bytes in Spark and DuckDB) — not for
-speed but for cross-engine verifiability; a production deployment would
-swap in ``xxhash64`` with one line.
+speed but for cross-engine verifiability. Every LSH key is built in one
+place per engine: the MinHash family in :func:`_minhashes` (Spark) and
+:func:`_sql_minhash_ctes` (DuckDB), so a production swap to ``xxhash64``
+is one edit in each; the band unpivot, the band-collision pairs and the
+bucket aggregation likewise (``_band_unpivot`` / ``_sql_stacked``,
+``_band_pairs`` / ``_sql_cands``, ``_lsh_buckets`` / ``_SQL_BUCKETS``),
+and the sign-LSH bucket in ``simsearch._sign_bucket`` /
+``simsearch._sql_sign_bucket``.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .. import sinks
 from .hashing import hex4_sql_duck
+from .simsearch import _emb, _sign_bucket, _sql_sign_bucket
 
 N_BANDS = 4
 JACCARD_THRESHOLD = 0.2
@@ -53,6 +60,86 @@ FROM documents GROUP BY 1
 """
 
 
+def _minhashes(docs: DataFrame, n: int) -> tuple[DataFrame, list]:
+    """The one MinHash family: ``docs`` plus its distinct whitespace
+    tokens ``w``, and ``n`` signature columns over them, the i-th being
+    min over ``w`` of md5('<i>|' || token) in hex. Each caller picks its
+    own row filter (``w`` is NULL for NULL text)."""
+    d = docs.withColumn(
+        "w", F.array_distinct(F.split(F.trim("text"), r"\s+")))
+    return d, [F.array_min(F.expr(
+        f"transform(w, x -> md5(cast(concat('{i}|', x) as binary)))"))
+        for i in range(n)]
+
+
+def _sql_minhash_ctes(n: int, where: str = "") -> str:
+    """DuckDB twin of :func:`_minhashes`: the ``tok`` and ``sigs`` CTEs
+    (no leading WITH), ``sigs(doc_id, sig_0 .. sig_{n-1})`` over the
+    documents rows that pass ``where``."""
+    cond = f" WHERE {where}" if where else ""
+    return (
+        "tok AS (SELECT doc_id, unnest(list_distinct("
+        "string_split_regex(trim(text), '\\s+'))) AS w FROM documents"
+        f"{cond}),\n"
+        "sigs AS (SELECT doc_id, "
+        + ", ".join(f"min(md5('{i}|' || w)) AS sig_{i}" for i in range(n))
+        + " FROM tok GROUP BY doc_id)")
+
+
+def _band_unpivot(keyed: DataFrame, keys: list[str],
+                  keep: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """``(*keep, band, key)``: one row per band, band k keyed by the
+    column ``keys[k]`` — the LSH band unpivot (a ``stack``, no shuffle)."""
+    return keyed.selectExpr(
+        *keep, "stack({n}, {cols}) as (band, key)".format(
+            n=len(keys), cols=", ".join(f"{k}, {c}"
+                                        for k, c in enumerate(keys))))
+
+
+def _sql_stacked(src: str, keys: list[str], keep: str = "doc_id") -> str:
+    """DuckDB twin of :func:`_band_unpivot` over the relation ``src``
+    (the body of a ``stacked`` CTE)."""
+    return " UNION ALL ".join(f"SELECT {keep}, {k} AS band, {c} AS key "
+                              f"FROM {src}" for k, c in enumerate(keys))
+
+
+def _band_pairs(stacked: DataFrame, id_col: str, a: str,
+                b: str) -> DataFrame:
+    """Band-collision pairs ``(a, b)``, ``a < b``, distinct across bands:
+    the equi-join of a :func:`_band_unpivot` frame with itself on
+    ``(band, key)`` — never all-pairs. A caller that reads ``stacked``
+    twice checkpoints it first."""
+    x = stacked.select("band", "key", F.col(id_col).alias(a))
+    y = stacked.select("band", "key", F.col(id_col).alias(b))
+    return (x.join(y, ["band", "key"]).where(F.col(a) < F.col(b))
+            .select(a, b).distinct())
+
+
+def _sql_cands(id_col: str = "doc_id", a: str = "doc_a",
+               b: str = "doc_b") -> str:
+    """DuckDB twin of :func:`_band_pairs` over ``stacked``: the ``cands``
+    CTE."""
+    return (f"cands AS (SELECT DISTINCT x.{id_col} AS {a}, "
+            f"y.{id_col} AS {b}\n"
+            "          FROM stacked x JOIN stacked y USING (band, key)\n"
+            f"          WHERE x.{id_col} < y.{id_col})")
+
+
+def _lsh_buckets(stacked: DataFrame) -> DataFrame:
+    """``(band, key, a, n)``: every LSH bucket of a MinHash
+    :func:`_band_unpivot` frame holding ``n >= 2`` docs, ``a`` its min
+    doc."""
+    return (stacked.groupBy("band", "key")
+            .agg(F.min("doc_id").alias("a"), F.count("*").alias("n"))
+            .where(F.col("n") >= 2))
+
+
+# DuckDB twin of _lsh_buckets over ``stacked``
+_SQL_BUCKETS = (
+    "buckets AS (SELECT band, key, min(doc_id) AS a, count(*) AS n\n"
+    "         FROM stacked GROUP BY band, key HAVING count(*) >= 2)")
+
+
 def minhash_frame(docs: DataFrame) -> DataFrame:
     """MinHash signatures over any ``(doc_id, text)`` frame: band b's
     signature = min over distinct tokens of md5(b || '|' || token),
@@ -64,13 +151,10 @@ def minhash_frame(docs: DataFrame) -> DataFrame:
     build — the root of the whole LSH chain — into a map-only stage
     that pipelines inside the scan. NULL-text docs drop (split yields
     NULL), matching the exploded form and the unnest-based oracle."""
-    d = docs.withColumn(
-        "w", F.array_distinct(F.split(F.trim("text"), r"\s+")))
-    sigs = [F.array_min(F.expr(
-        f"transform(w, x -> md5(cast(concat('{b}|', x) as binary)))"))
-        .alias(f"sig_{b}") for b in range(N_BANDS)]
+    d, sigs = _minhashes(docs, N_BANDS)
     return (d.where(F.col("w").isNotNull())
-            .select("doc_id", *sigs))
+            .select("doc_id", *[s.alias(f"sig_{b}")
+                                for b, s in enumerate(sigs)]))
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,54 +162,29 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_frame(_docs(spark, sf_dir))
 
 
-SQL_DEDUP_MINHASH = (
-    "WITH tok AS (SELECT doc_id, unnest(list_distinct("
-    "string_split_regex(trim(text), '\\s+'))) AS w FROM documents)\n"
-    "SELECT doc_id, "
-    + ", ".join(f"min(md5('{b}|' || w)) AS sig_{b}" for b in range(N_BANDS))
-    + "\nFROM tok GROUP BY doc_id"
-)
+SQL_DEDUP_MINHASH = ("WITH " + _sql_minhash_ctes(N_BANDS)
+                     + "\nSELECT * FROM sigs")
 
-
-def stacked_signatures_frame(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, sig) rows: the minhash signature table unpivoted —
-    shared by the bucket listing and the candidate-edge builder."""
-    sigs = minhash_frame(docs)
-    return sigs.selectExpr(
-        "doc_id",
-        "stack({n}, {cols}) as (band, sig)".format(
-            n=N_BANDS,
-            cols=", ".join(f"{b}, sig_{b}" for b in range(N_BANDS))))
-
-
-def _stacked_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stacked_signatures_frame(_docs(spark, sf_dir))
+# the r = 1 MinHash band stack as a SQL CTE prefix (the bucket listing,
+# the candidate-pair verifiers and the CC clustering oracle)
+_SQL_LSH_STACKED = (
+    "WITH " + _sql_minhash_ctes(N_BANDS) + ",\nstacked AS ("
+    + _sql_stacked("sigs", [f"sig_{b}" for b in range(N_BANDS)]) + ")")
 
 
 def q_dedup_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: docs sharing any band signature land in one bucket;
     buckets with >= 2 docs are the near-dup candidates (equi-join key,
     not an all-pairs scan)."""
-    stacked = _stacked_signatures(spark, sf_dir)
-    return (stacked.groupBy("band", "sig")
-            .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("min_doc"))
-            .where(F.col("n_docs") >= 2))
+    buckets = _lsh_buckets(minhash_band_keys(_docs(spark, sf_dir), 1, N_BANDS))
+    return buckets.select("band", F.col("key").alias("sig"),
+                          F.col("n").alias("n_docs"),
+                          F.col("a").alias("min_doc"))
 
 
 SQL_DEDUP_LSH_BUCKETS = (
-    "WITH tok AS (SELECT doc_id, unnest(list_distinct("
-    "string_split_regex(trim(text), '\\s+'))) AS w FROM documents),\n"
-    "sigs AS (SELECT doc_id, "
-    + ", ".join(f"min(md5('{b}|' || w)) AS sig_{b}" for b in range(N_BANDS))
-    + " FROM tok GROUP BY doc_id),\n"
-    "stacked AS ("
-    + " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, sig_{b} AS sig FROM sigs"
-        for b in range(N_BANDS))
-    + ")\n"
-    "SELECT band, sig, count(*) AS n_docs, min(doc_id) AS min_doc\n"
-    "FROM stacked GROUP BY band, sig HAVING count(*) >= 2"
-)
+    _SQL_LSH_STACKED + ",\n" + _SQL_BUCKETS
+    + "\nSELECT band, key AS sig, n AS n_docs, a AS min_doc FROM buckets")
 
 
 def minhash_band_keys(docs: DataFrame, r: int, b: int) -> DataFrame:
@@ -141,77 +200,29 @@ def minhash_band_keys(docs: DataFrame, r: int, b: int) -> DataFrame:
     Same shuffle-free projection shape as q_dedup_minhash (r*b
     array_min/transform passes, then a stack) — the band key is just a
     longer string, the downstream (band, key) equi-join is identical at
-    any (r, b)."""
-    d = docs.withColumn(
-        "w", F.array_distinct(F.split(F.trim("text"), r"\s+")))
-    mins = [F.array_min(F.expr(
-        f"transform(w, x -> md5(cast(concat('{i}|', x) as binary)))"))
-        .alias(f"m_{i}") for i in range(r * b)]
-    sigs = d.where(F.col("w").isNotNull()).select("doc_id", *mins)
-    keyed = sigs.select("doc_id", *[
-        F.concat(*[F.col(f"m_{k * r + j}") for j in range(r)])
-        .alias(f"k_{k}") for k in range(b)])
-    return keyed.selectExpr(
-        "doc_id",
-        "stack({n}, {cols}) as (band, key)".format(
-            n=b, cols=", ".join(f"{k}, k_{k}" for k in range(b))))
+    any (r, b). At r = 1 the band key is the bare minhash."""
+    d, mins = _minhashes(docs, r * b)
+    keys = [mins[k] if r == 1 else F.concat(*mins[k * r:(k + 1) * r])
+            for k in range(b)]
+    keyed = d.where(F.col("w").isNotNull()).select(
+        "doc_id", *[key.alias(f"k_{k}") for k, key in enumerate(keys)])
+    return _band_unpivot(keyed, [f"k_{k}" for k in range(b)])
 
 
 def banded_candidate_pairs(docs: DataFrame, r: int, b: int) -> DataFrame:
-    """Candidate near-dup pairs under the (r, b) dial: equi-join on
-    (band, key), within-bucket pairs, distinct across bands — the
-    r-generalized _lsh_candidate_pairs."""
+    """Candidate near-dup pairs under the (r, b) dial: every pair that
+    collides in ANY band (equi-join on (band, key), distinct across
+    bands) — the candidate set a near-dup verifier consumes. The pair
+    universe is bounded by banding (sum of bucket-size-choose-2), never
+    all-pairs. The registry verifiers run ``(1, N_BANDS)``: on the
+    synthetic corpus the candidate volume is dominated by TRUE
+    similarity, not banding slop (see :func:`minhash_band_keys`)."""
     stacked = minhash_band_keys(docs, r, b).localCheckpoint(eager=True)
-    ka = stacked.select("band", "key", F.col("doc_id").alias("doc_a"))
-    kb = stacked.select("band", "key", F.col("doc_id").alias("doc_b"))
-    return (ka.join(kb, ["band", "key"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
+    return _band_pairs(stacked, "doc_id", "doc_a", "doc_b")
 
 
-def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All within-bucket doc pairs from MinHash-LSH banding — the textbook
-    candidate set a near-dup verifier consumes (a pair is a candidate iff
-    it collides in ANY band). This is the operator that makes pair
-    verification linear-ish at 10^12 docs: the pair universe is bounded
-    by banding (sum of bucket-size-choose-2), never all-pairs; the
-    equi-join key is (band, sig).
-
-    Scale dial note: this corpus uses b=N_BANDS bands of r=1 minhash
-    each (P[candidate] = 1-(1-s)^b). On a real crawl, raise r (concat r
-    minhashes per band key: P = 1-(1-s^r)^b) to push the S-curve right
-    and keep buckets small — the band key is just a longer string, the
-    join shape is identical. On the synthetic corpus the candidate
-    volume is dominated by TRUE similarity, not banding slop (30-word
-    vocabulary → 94% of all pairs genuinely pass jaccard ≥ 0.2 at
-    sf0.01; r=2 banding was measured to trim candidates only ~35%), so
-    the demo keeps r=1."""
-    stacked = _stacked_signatures(spark, sf_dir).localCheckpoint(eager=True)
-    a = stacked.select("band", "sig", F.col("doc_id").alias("doc_a"))
-    b = stacked.select("band", "sig", F.col("doc_id").alias("doc_b"))
-    return (a.join(b, ["band", "sig"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
-
-
-# the stacked-signatures subtree as a SQL CTE prefix (shared by the
-# candidate-driven pair verifiers and the CC clustering oracle)
-def _sql_stacked_prefix() -> str:
-    return (
-        "WITH tok AS (SELECT doc_id, unnest(list_distinct("
-        "string_split_regex(trim(text), '\\s+'))) AS w FROM documents),\n"
-        "sigs AS (SELECT doc_id, "
-        + ", ".join(f"min(md5('{b}|' || w)) AS sig_{b}" for b in range(N_BANDS))
-        + " FROM tok GROUP BY doc_id),\n"
-        "stacked AS ("
-        + " UNION ALL ".join(
-            f"SELECT doc_id, {b} AS band, sig_{b} AS sig FROM sigs"
-            for b in range(N_BANDS))
-        + "),\n"
-        "cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b\n"
-        "          FROM stacked a JOIN stacked b USING (band, sig)\n"
-        "          WHERE a.doc_id < b.doc_id)"
-    )
+# the candidate pairs as a SQL CTE prefix (the pair verifiers' oracle)
+_SQL_CANDS_PREFIX = _SQL_LSH_STACKED + ",\n" + _sql_cands()
 
 
 def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,7 +233,7 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate window is bucket-driven at any scale (not an id cap).
     The MinHash→LSH→verify chain is the standard web-scale near-dup
     pipeline shape."""
-    cands = _lsh_candidate_pairs(spark, sf_dir)
+    cands = banded_candidate_pairs(_docs(spark, sf_dir), 1, N_BANDS)
     sets = _docs(spark, sf_dir).select(
         "doc_id",
         F.array_distinct(F.split(F.trim("text"), r"\s+")).alias("ws"))
@@ -236,7 +247,7 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("jaccard") >= JACCARD_THRESHOLD))
 
 
-SQL_DEDUP_JACCARD_PAIRS = _sql_stacked_prefix() + f""",
+SQL_DEDUP_JACCARD_PAIRS = _SQL_CANDS_PREFIX + f""",
 sets AS (
   SELECT doc_id, list_distinct(string_split_regex(trim(text), '\\s+')) AS ws
   FROM documents
@@ -334,7 +345,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification on the order-sensitive shingle sets; pairs where either
     doc has < NGRAM_N words cannot form a shingle and are skipped on both
     engines)."""
-    cands = _lsh_candidate_pairs(spark, sf_dir)
+    cands = banded_candidate_pairs(_docs(spark, sf_dir), 1, N_BANDS)
     d = (_docs(spark, sf_dir)
          .withColumn("w", F.split(F.trim("text"), r"\s+"))
          .where(F.size("w") >= NGRAM_N))
@@ -349,7 +360,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("jaccard") >= NGRAM_THRESHOLD))
 
 
-SQL_DEDUP_NGRAM_JACCARD = _sql_stacked_prefix() + f""",
+SQL_DEDUP_NGRAM_JACCARD = _SQL_CANDS_PREFIX + f""",
 d AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
   FROM documents
@@ -390,21 +401,13 @@ def emb_candidate_pairs(spark: SparkSession, sf_dir: str,
     a true pair collides somewhere: P(candidate) = 1-(1-p^bits)^bands.
     Band 0 equals the previous single fixed bucket, so the banded
     candidate set provably contains the old one (test-asserted)."""
-    from .simsearch import _emb, _sign_bucket
-    e = _emb(spark, sf_dir)
-    keyed = e.select(
+    keyed = _emb(spark, sf_dir).select(
         "vec_id",
         *[_sign_bucket("vec", bits, k * bits).alias(f"b{k}")
           for k in range(bands)])
-    stacked = keyed.selectExpr(
-        "vec_id",
-        "stack({n}, {cols}) as (band, bucket)".format(
-            n=bands, cols=", ".join(f"{k}, b{k}" for k in range(bands))))
-    a = stacked.select("band", "bucket", F.col("vec_id").alias("id_a"))
-    b = stacked.select("band", "bucket", F.col("vec_id").alias("id_b"))
-    return (a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+    stacked = _band_unpivot(keyed, [f"b{k}" for k in range(bands)],
+                            ("vec_id",))
+    return _band_pairs(stacked, "vec_id", "id_a", "id_b")
 
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,7 +417,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. Vectors are L2-normalized so dot == cosine; the candidate dots
     run in the numpy fold kernel (veckernel — bit-identical to the
     zip_with/aggregate fold), rounding stays JVM-side."""
-    from .simsearch import _emb
     from .veckernel import fold_dots
     cands = emb_candidate_pairs(spark, sf_dir)
     e = _emb(spark, sf_dir)
@@ -427,26 +429,15 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("cosine") >= COSINE_THRESHOLD))
 
 
-def _sql_emb_bucket(offset: int, bits: int) -> str:
-    return "(" + " + ".join(
-        f"CASE WHEN embedding[{offset + k + 1}] >= 0 THEN {2 ** k} ELSE 0 END"
-        for k in range(bits)) + ")"
-
-
 SQL_DEDUP_EMBEDDING_COSINE = (
     "WITH keyed AS (SELECT vec_id, embedding::DOUBLE[] AS v, "
     + ", ".join(
-        f"{_sql_emb_bucket(k * EMB_BAND_BITS, EMB_BAND_BITS)} AS b{k}"
+        f"{_sql_sign_bucket(k * EMB_BAND_BITS, EMB_BAND_BITS)} AS b{k}"
         for k in range(EMB_BANDS))
     + " FROM embeddings),\n"
     "stacked AS ("
-    + " UNION ALL ".join(
-        f"SELECT vec_id, {k} AS band, b{k} AS bucket FROM keyed"
-        for k in range(EMB_BANDS))
-    + "),\n"
-    "cands AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b\n"
-    "          FROM stacked a JOIN stacked b USING (band, bucket)\n"
-    "          WHERE a.vec_id < b.vec_id)\n"
+    + _sql_stacked("keyed", [f"b{k}" for k in range(EMB_BANDS)], "vec_id")
+    + "),\n" + _sql_cands("vec_id", "id_a", "id_b") + "\n"
     + f"""SELECT c.id_a, c.id_b,
        round(list_dot_product(x.v, y.v), 4) AS cosine
 FROM cands c
@@ -468,11 +459,8 @@ def lsh_edges_frame(docs: DataFrame) -> DataFrame:
     checkpoint is released by GC when the frame goes out of scope —
     a cache() here would accumulate executor storage for the session
     lifetime across the driver's 50-query run."""
-    stacked = stacked_signatures_frame(docs).localCheckpoint(eager=True)
-    mins = (stacked.groupBy("band", "sig")
-            .agg(F.min("doc_id").alias("a"), F.count("*").alias("n"))
-            .where(F.col("n") >= 2))
-    return (stacked.join(mins, ["band", "sig"])
+    stacked = minhash_band_keys(docs, 1, N_BANDS).localCheckpoint(eager=True)
+    return (stacked.join(_lsh_buckets(stacked), ["band", "key"])
             .where(F.col("doc_id") != F.col("a"))
             .select("a", F.col("doc_id").alias("b"))
             .distinct())
@@ -533,20 +521,9 @@ def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_cc() -> str:
     base = (
-        "WITH tok AS (SELECT doc_id, unnest(list_distinct("
-        "string_split_regex(trim(text), '\\s+'))) AS w FROM documents),\n"
-        "sigs AS (SELECT doc_id, "
-        + ", ".join(f"min(md5('{b}|' || w)) AS sig_{b}" for b in range(N_BANDS))
-        + " FROM tok GROUP BY doc_id),\n"
-        "stacked AS ("
-        + " UNION ALL ".join(
-            f"SELECT doc_id, {b} AS band, sig_{b} AS sig FROM sigs"
-            for b in range(N_BANDS))
-        + "),\n"
-        "mins AS (SELECT band, sig, min(doc_id) AS a, count(*) AS n\n"
-        "         FROM stacked GROUP BY band, sig HAVING count(*) >= 2),\n"
+        _SQL_LSH_STACKED + ",\n" + _SQL_BUCKETS + ",\n"
         "edges AS (SELECT DISTINCT m.a, s.doc_id AS b\n"
-        "          FROM stacked s JOIN mins m USING (band, sig)\n"
+        "          FROM stacked s JOIN buckets m USING (band, key)\n"
         "          WHERE s.doc_id <> m.a),\n"
         "sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM edges\n"
         "        UNION ALL SELECT b AS src, a AS dst FROM edges),\n"
@@ -652,11 +629,8 @@ def build_dedup_index(docs: DataFrame) -> DataFrame:
     Empty/NULL-text docs are excluded (nothing to match on) — the
     decision side keeps them.
     """
-    d = docs.withColumn(
-        "w", F.array_distinct(F.split(F.trim("text"), r"\s+")))
-    sig = F.array(*[F.array_min(F.expr(
-        f"transform(w, x -> md5(cast(concat('{i}|', x) as binary)))"))
-        for i in range(IDX_SIGS)])
+    d, sigs = _minhashes(docs, IDX_SIGS)
+    sig = F.array(*sigs)
     norm = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))),
                                   r"\s+", " ").cast("binary"))
     # length(trim(...)) > 0, not size(w) > 0: split("") yields [""], so
@@ -872,34 +846,26 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_incremental() -> str:
-    sigs = ", ".join(f"min(md5('{i}|' || w)) AS sig_{i}"
-                     for i in range(IDX_SIGS))
-    stack = " UNION ALL ".join(
-        f"SELECT doc_id, {i} AS band, sig_{i} AS sig FROM {{side}}"
-        for i in range(IDX_SIGS))
+    def stack(side: str) -> str:
+        return _sql_stacked(side, [f"sig_{i}" for i in range(IDX_SIGS)])
     return f"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_distinct(
-           string_split_regex(trim(text), '\\s+'))) AS w
-  FROM documents WHERE length(trim(text)) > 0
-), sigs AS (
-  SELECT doc_id, {sigs} FROM tok GROUP BY doc_id
-), norm AS (
+WITH {_sql_minhash_ctes(IDX_SIGS, "length(trim(text)) > 0")},
+norm AS (
   SELECT doc_id,
          md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
            AS norm_md5
   FROM documents WHERE length(trim(text)) > 0
 ), idx_sigs AS (SELECT * FROM sigs WHERE doc_id % 2 = 0),
 new_sigs AS (SELECT * FROM sigs WHERE doc_id % 2 = 1),
-idx_stacked AS ({stack.format(side='idx_sigs')}),
-new_stacked AS ({stack.format(side='new_sigs')}),
+idx_stacked AS ({stack('idx_sigs')}),
+new_stacked AS ({stack('new_sigs')}),
 exact AS (
   SELECT DISTINCT n.doc_id FROM norm n
   JOIN norm i ON n.norm_md5 = i.norm_md5
   WHERE n.doc_id % 2 = 1 AND i.doc_id % 2 = 0
 ), agree AS (
   SELECT n.doc_id AS new_id, i.doc_id AS idx_id, count(*) AS n_agree
-  FROM new_stacked n JOIN idx_stacked i USING (band, sig)
+  FROM new_stacked n JOIN idx_stacked i USING (band, key)
   GROUP BY 1, 2
 ), best AS (
   SELECT new_id, max(n_agree) AS n_sig_agree, min(idx_id) AS matched_doc

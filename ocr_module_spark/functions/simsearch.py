@@ -105,6 +105,14 @@ def _sign_bucket(vec: str, bits: int = SIGN_BITS, offset: int = 0):
     return out.cast("int")
 
 
+def _sql_sign_bucket(offset: int, bits: int) -> str:
+    """DuckDB twin of :func:`_sign_bucket` over the ``embedding`` column
+    (1-based lists); the caller casts."""
+    return "(" + " + ".join(
+        f"CASE WHEN embedding[{offset + k + 1}] >= 0 THEN {2 ** k} ELSE 0 END"
+        for k in range(bits)) + ")"
+
+
 def q_ann_sign_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperoctant LSH bucketing: 8-bit sign key over leading dims."""
     e = _emb(spark, sf_dir)
@@ -113,11 +121,8 @@ def q_ann_sign_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_SIGN_BUCKETS = (
-    "WITH b AS (SELECT ("
-    + " + ".join(
-        f"CASE WHEN embedding[{b + 1}] >= 0 THEN {2 ** b} ELSE 0 END"
-        for b in range(SIGN_BITS))
-    + ")::INTEGER AS bucket FROM embeddings)\n"
+    f"WITH b AS (SELECT {_sql_sign_bucket(0, SIGN_BITS)}::INTEGER AS bucket"
+    " FROM embeddings)\n"
     "SELECT bucket, count(*) AS n_vecs FROM b GROUP BY bucket"
 )
 
@@ -137,12 +142,10 @@ def q_ann_bucketed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.col("dot").desc(), F.col("vec_id")).limit(TOP_K)
 
 
-SQL_ANN_BUCKETED_KNN = (
-    "WITH b AS (SELECT vec_id, label, embedding, ("
-    + " + ".join(
-        f"CASE WHEN embedding[{b + 1}] >= 0 THEN {2 ** b} ELSE 0 END"
-        for b in range(SIGN_BITS))
-    + f""")::INTEGER AS bucket FROM embeddings),
+SQL_ANN_BUCKETED_KNN = f"""
+WITH b AS (SELECT vec_id, label, embedding,
+                  {_sql_sign_bucket(0, SIGN_BITS)}::INTEGER AS bucket
+           FROM embeddings),
 q AS (SELECT embedding::DOUBLE[] AS qvec, bucket AS qbucket FROM b
       WHERE vec_id = {QUERY_VEC_ID})
 SELECT vec_id, label,
@@ -151,7 +154,6 @@ FROM b JOIN q ON b.bucket = q.qbucket
 WHERE vec_id <> {QUERY_VEC_ID}
 ORDER BY dot DESC, vec_id LIMIT {TOP_K}
 """
-)
 
 
 NLIST = 16                  # IVF coarse centroids (deterministic: first 16 vecs)
@@ -454,9 +456,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_recall_eval() -> str:
     from .hashing import hex4_sql_duck
-    bucket = ("(" + " + ".join(
-        f"CASE WHEN embedding[{b + 1}] >= 0 THEN {2 ** b} ELSE 0 END"
-        for b in range(RECALL_EVAL_BITS)) + ")::INTEGER")
+    bucket = _sql_sign_bucket(0, RECALL_EVAL_BITS) + "::INTEGER"
     sample = (hex4_sql_duck("md5(CAST(vec_id AS VARCHAR))")
               + f" % {SAMPLE_MOD} = 0")
     return f"""

@@ -79,6 +79,9 @@ DOC_QUERIES = [
     "dedup_minhash_signatures",
     "dedup_lsh_buckets",
     "dedup_keep_list",
+    "dedup_cc_clusters",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
     "text_vocab_topk",
     "text_quality_tiers",
     "sample_stratified_hash",

@@ -68,6 +68,24 @@ def test_fresh_and_empty_docs_are_kept(spark, index):
             and not got[i]["near_dup"]
 
 
+def test_index_shares_the_curate_minhash_family(spark, sf_dir):
+    """The refresh index and the curate-side LSH hash identically: the
+    first N_BANDS index signatures of every indexed doc are exactly
+    minhash_frame's sig_0..sig_{N_BANDS-1}, so a hash change cannot
+    reach one path and not the other."""
+    from ocr_module_spark.functions.dedup import N_BANDS, minhash_frame
+    edge = spark.createDataFrame([(-1, T1), (-2, "  "), (-3, None)],
+                                 "doc_id long, text string")
+    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", "text").unionByName(edge))
+    idx = {r["doc_id"]: list(r["sig"][:N_BANDS])
+           for r in build_dedup_index(docs).collect()}
+    mh = {r["doc_id"]: [r[f"sig_{b}"] for b in range(N_BANDS)]
+          for r in minhash_frame(docs).collect()}
+    assert -1 in idx and -2 not in idx and -3 not in idx
+    assert idx == {d: mh[d] for d in idx}
+
+
 def test_no_all_pairs_join_in_plan(spark, index):
     new = spark.createDataFrame([(2, T2), (3, "other words here")],
                                 "doc_id long, text string")

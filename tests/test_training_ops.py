@@ -124,9 +124,9 @@ def test_jaccard_pairs_are_lsh_candidates(spark, sf_dir):
     """Every verified near-dup pair must come from the LSH candidate set
     (bucket-driven window, not an id cap)."""
     from ocr_module_spark.functions.dedup import (
-        _lsh_candidate_pairs, q_dedup_jaccard_pairs)
-    cands = {(r["doc_a"], r["doc_b"]) for r in
-             _lsh_candidate_pairs(spark, sf_dir).collect()}
+        N_BANDS, _docs, banded_candidate_pairs, q_dedup_jaccard_pairs)
+    cands = {(r["doc_a"], r["doc_b"]) for r in banded_candidate_pairs(
+        _docs(spark, sf_dir), 1, N_BANDS).collect()}
     pairs = {(r["doc_a"], r["doc_b"]) for r in
              q_dedup_jaccard_pairs(spark, sf_dir).collect()}
     assert pairs <= cands

@@ -4,12 +4,18 @@ catalog (the driver's 50-row window and every entry beyond it): run each
 parquet dir, compare row count, column names, and an order-insensitive
 value hash. Entries without an oracle are checked for non-empty output.
 
-    python tools/parity_check.py [sf_dir] [name_filter]
+    python tools/parity_check.py [sf_dir] [name_filter[,name_filter...]]
+
+Each line carries the entry's Spark and DuckDB value hashes, so two runs
+(say, before and after a rewrite) diff line by line once the timings are
+cut off: ``sed 's/ spark=.*//'``. The session runs on
+``local[$SPARK_GRAFT_CPUS]`` (default: every core).
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import pathlib
 import sys
 import time
@@ -49,12 +55,13 @@ def value_hash(rows, cols):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
+    filters = sys.argv[2].split(",") if len(sys.argv) > 2 else [""]
 
     import __spark_entry__ as entry_mod
     from ocr_module_spark.session import get_spark
 
-    spark = get_spark("parity-check", cores=16, shuffle_partitions=16)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    spark = get_spark("parity-check", cores=cores, shuffle_partitions=cores)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -63,16 +70,17 @@ def main() -> int:
     cat = entry_mod.catalog()
     failures = []
     for name, (fn, sql) in sorted(cat.items()):
-        if name_filter and name_filter not in name:
+        if not any(f in name for f in filters):
             continue
         t0 = time.time()
         df = fn(spark, sf_dir)
         s_cols = df.columns
         s_rows = [tuple(r) for r in df.collect()]
         t_spark = time.time() - t0
+        hs = value_hash(s_rows, s_cols)
         if sql is None:
             print(f"  {name:32s} rows={len(s_rows):7d} (rows-only) "
-                  f"spark={t_spark:5.1f}s")
+                  f"hash={hs}  spark={t_spark:5.1f}s")
             if not s_rows:
                 failures.append((name, "empty result"))
             continue
@@ -83,13 +91,12 @@ def main() -> int:
         t_duck = time.time() - t0
         ok_cols = sorted(s_cols) == sorted(d_cols)
         ok_rows = len(s_rows) == len(d_rows)
-        hs = value_hash(s_rows, s_cols)
         hd = value_hash(d_rows, d_cols)
         ok_hash = hs == hd
         status = "OK " if (ok_cols and ok_rows and ok_hash) else "FAIL"
         print(f"  {name:32s} rows={len(s_rows):7d}/{len(d_rows):7d} "
-              f"cols={'=' if ok_cols else '≠'} hash={'=' if ok_hash else '≠'} "
-              f"spark={t_spark:5.1f}s duck={t_duck:4.1f}s  {status}")
+              f"cols={'=' if ok_cols else '≠'} hash={hs}/{hd} {status} "
+              f"spark={t_spark:5.1f}s duck={t_duck:4.1f}s")
         if status == "FAIL":
             failures.append((name, f"cols={ok_cols} rows={ok_rows} hash={ok_hash}"))
             if not ok_cols:
