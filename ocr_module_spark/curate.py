@@ -3,7 +3,7 @@ for, as one library call —
 
     pages (url, warc_ts, html, text, lang)
       → main-content extraction        (pipeline.extract — one Arrow stage)
-      → quality gate                   (textstats.quality_frame, Gopher-style)
+      → quality gate                   (textstats.qf_reasons, Gopher-style)
       → near-dup keep-list             (dedup.dedup_decision_frame, MinHash-LSH → CC)
       → eval-set decontamination       (decontam.ngram_flags_frame, shingle join)
       → token-budget mixture selection (mix_from_audit, optional final stage)
@@ -20,8 +20,12 @@ isolation (50/50 DuckDB-parity green); this module only CHAINS them, so
 the composition inherits each stage's scale shape: extraction never
 shuffles raw bytes, the quality gate is a scan-speed projection, the
 signature build is shuffle-free, the dedup/contamination decisions are
-broadcast-sized frames joined back on doc_id. ``tools/curate.py`` is the
-spark-submit CLI.
+broadcast-sized frames joined back on doc_id. The quality gate is the
+one stage not called through its registry frame: its verdict (the
+``qf_reasons`` bitmask ``quality_frame``'s ``keep`` is made of) is a
+column of the checkpointed docs, so the later gates filter that frame
+instead of joining a quality frame back onto it. ``tools/curate.py`` is
+the spark-submit CLI.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ from . import pipeline
 from .functions.decontam import ngram_flags_frame
 from .functions.dedup import dedup_decision_frame, span_dedup_text
 from .functions.textstats import (_words, budget_select, pii_scrub,
-                                  quality_frame, tier_expr)
+                                  qf_reasons, tier_expr)
 
 
 def curate(spark: SparkSession, pages: DataFrame,
@@ -92,34 +96,36 @@ def curate(spark: SparkSession, pages: DataFrame,
     # url as the cluster canonical). A hashed key would be narrower on
     # the shuffle wire but collides at ~n^2/2^65 — at the 10^12-doc
     # design point that is tens of thousands of silently-merged docs
-    docs = extracted.select(
-        F.col("url").alias("doc_id"), "url", "text", *norm_cols)
-    docs = docs.localCheckpoint(eager=True)  # 3 consumers below
+    # quality_keep is quality_frame's keep (same bitmask, same words),
+    # computed in the checkpoint so no gate joins it back on doc_id
+    docs = (extracted
+            .select(F.col("url").alias("doc_id"), "url", "text",
+                    *norm_cols)
+            .withColumn("w", _words())
+            .withColumn("quality_keep", qf_reasons() == 0)
+            .drop("w"))
+    # consumers below: the dedup and decontamination gates (through
+    # passing), the audit base, and the optional model and langid stages
+    docs = docs.localCheckpoint(eager=True)
 
-    quality = quality_frame(docs).select(
-        "doc_id", F.col("keep").alias("quality_keep"))
+    gated = docs
     if model_weights is not None:
         from .functions.model_score import score_frame
         model = score_frame(docs, model_weights).select(
             "doc_id", F.col("keep").alias("model_keep"))
-        quality = (quality.join(model, "doc_id", "left")
-                   .select("doc_id",
-                           F.coalesce("model_keep", F.lit(False))
-                           .alias("model_keep"),
-                           (F.col("quality_keep")
-                            & F.coalesce("model_keep", F.lit(False)))
-                           .alias("quality_keep")))
-    passing = (docs.join(quality.select("doc_id", "quality_keep"),
-                         "doc_id")
-               .where(F.col("quality_keep")))
+        gated = (docs.join(model, "doc_id", "left")
+                 .withColumn("quality_keep",
+                             F.col("quality_keep")
+                             & F.coalesce("model_keep", F.lit(False)))
+                 .drop("model_keep"))
+    passing = gated.where(F.col("quality_keep"))
 
     dup = dedup_decision_frame(passing).withColumnRenamed(
         "keep", "dup_keep")
     flags = ngram_flags_frame(passing, bench_docs).select(
         "doc_id", "contaminated")
 
-    base = (docs.join(quality, "doc_id")
-            .join(dup, "doc_id", "left")
+    base = (gated.join(dup, "doc_id", "left")
             .join(flags, "doc_id", "left"))
     cols = ["url", "text", "quality_keep",
             F.coalesce("dup_keep", F.lit(False)).alias("dup_keep"),

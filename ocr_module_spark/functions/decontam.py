@@ -60,20 +60,18 @@ def _is_bench(col: str):
 def shingled_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, ss) with ss = distinct word NGRAM_N-shingles over any
     ``(doc_id, text)`` frame — the same shingle machinery as
-    dedup.q_dedup_ngram_jaccard (dedup.py). The shingle expression is
-    guarded by a when() so it is TOTAL: the explode downstream makes
-    Spark synthesize a ``size(ss) > 0`` generator pre-filter, and
-    Catalyst may reorder that deterministic predicate below the
-    ``size(w) >= N`` row filter — an unguarded ``w[i+2]`` would then
-    throw INVALID_ARRAY_INDEX on short/NULL-text docs (hostile-corpus
-    regression)."""
+    dedup.q_dedup_ngram_jaccard (dedup.py). The shingle expression
+    needs no guard: the explode downstream makes Spark synthesize a
+    ``size(ss) > 0`` generator pre-filter that Catalyst may evaluate
+    before the ``size(w) >= N`` row filter, and
+    :func:`dedup.shingle_sql_spark` is total (it indexes no array, so a
+    short or NULL-text doc gives ``[]`` or NULL, never
+    INVALID_ARRAY_INDEX); the row filter alone decides which docs get
+    a row."""
     d = (docs
          .withColumn("w", F.split(F.trim("text"), r"\s+"))
          .where(F.size("w") >= NGRAM_N))
-    sh = F.when(
-        F.size("w") >= NGRAM_N, F.expr(shingle_sql_spark())
-    ).otherwise(F.array().cast("array<string>"))
-    return d.select("doc_id", sh.alias("ss"))
+    return d.select("doc_id", F.expr(shingle_sql_spark()).alias("ss"))
 
 
 def ngram_flags_frame(corpus_docs: DataFrame,

@@ -323,10 +323,25 @@ def shingle_sql_spark(w: str = "w", n: int = NGRAM_N) -> str:
     expression string — ONE definition of the shingle for the batch
     verifier, decontamination, and the streaming flags (previously three
     hand-written 3-gram copies; the width now actually follows ``n``,
-    e.g. 13 for a Gopher-style web-scale run)."""
-    parts = ", ".join(f"{w}[i+{j}]" if j else f"{w}[i]" for j in range(n))
-    return (f"array_distinct(transform(sequence(0, size({w}) - {n}), "
-            f"i -> concat_ws(' ', {parts})))")
+    e.g. 13 for a Gopher-style web-scale run).
+
+    Linear time per row: the k-th shingle is the k-th struct of
+    ``arrays_zip`` over the ``n`` shifted slices of ``w``, cut to the
+    ``size(w) - n + 1`` full rows (the zip pads shorter slices with
+    NULL, which ``concat_ws`` would skip). ``w`` appears only OUTSIDE
+    the lambda: when Catalyst inlines ``w = split(...)`` into an
+    inferred filter (the ``size(ss) > 0`` pre-filter of a downstream
+    ``explode``), the split then runs a fixed number of times per row;
+    a ``w[i]`` inside the lambda would re-split the whole text once per
+    shingle (quadratic). Nothing indexes an array either, so the
+    expression is total: fewer than ``n`` words give ``[]``, NULL
+    ``w`` gives NULL (as :func:`shingle_sql_duck` does), and no row
+    order or filter reordering can raise INVALID_ARRAY_INDEX."""
+    shifted = ", ".join(f"slice({w}, {j + 1}, size({w}))" for j in range(n))
+    parts = ", ".join(f"z['{j}']" for j in range(n))
+    return (f"array_distinct(slice(transform(arrays_zip({shifted}), "
+            f"z -> concat_ws(' ', {parts})), "
+            f"1, greatest(size({w}) - {n - 1}, 0)))")
 
 
 def shingle_sql_duck(w: str = "w", n: int = NGRAM_N) -> str:

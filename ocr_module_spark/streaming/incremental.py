@@ -199,16 +199,18 @@ def stream_decon_flags(pages_stream: DataFrame,
     epoch at all).
     """
     from ..functions.decontam import DECON_FRAC_X100
-    from ..functions.dedup import NGRAM_N, shingle_sql_spark
+    from ..functions.dedup import shingle_sql_spark
 
     def shingled(df: DataFrame, *keep: str) -> DataFrame:
-        # tokenize ONCE into w, then the shared guarded shingle expr —
-        # the same single definition the batch verifier and
-        # decontamination use (dedup.shingle_sql_spark)
+        # tokenize ONCE into w, then the shared shingle expr — the same
+        # single definition the batch verifier and decontamination use
+        # (dedup.shingle_sql_spark). It already gives [] for a page of
+        # fewer than NGRAM_N words; NULL text gives NULL, and since
+        # every page keeps its row here (no size(w) filter, unlike the
+        # batch path) the coalesce turns that into [] -> 0 shingles
         d = df.withColumn("w", F.split(F.trim(F.col("text")), r"\s+"))
-        sh = F.when(F.size("w") >= NGRAM_N,
-                    F.expr(shingle_sql_spark())) \
-             .otherwise(F.array().cast("array<string>"))
+        sh = F.coalesce(F.expr(shingle_sql_spark()),
+                        F.array().cast("array<string>"))
         return d.select(*keep, sh.alias("ss"))
 
     bench_arr = (shingled(bench_docs)

@@ -55,6 +55,42 @@ def test_curated_urls_unique_and_clean(curated_audit):
     assert {r["url"] for r in cur.collect()} == kept
 
 
+def test_audit_quality_keep_is_quality_frame_keep(spark, curated_audit):
+    """The audit's quality_keep is quality_frame's keep verdict for every
+    url, and with model_weights it is that verdict AND the model's
+    (an unscored doc counts as rejected)."""
+    from ocr_module_spark.functions.model_score import (score_frame,
+                                                        weights_frame)
+    from ocr_module_spark.functions.textstats import quality_frame
+
+    _cur, audit, _ = curated_audit
+    docs = audit.select(F.col("url").alias("doc_id"), "text")
+    rule = {r["doc_id"]: r["keep"] for r in
+            quality_frame(docs).select("doc_id", "keep").collect()}
+    got = {r["url"]: r["quality_keep"] for r in
+           audit.select("url", "quality_keep").collect()}
+    assert got == rule
+    assert 0 < sum(rule.values()) < len(rule)
+
+    # weights trained on the rule labels agree with the rule; zeroing
+    # every third word (by hash) makes the model reject some rule keeps
+    w = (weights_frame(docs)
+         .withColumn("w_x1000",
+                     F.when(F.pmod(F.xxhash64("word"), F.lit(3)) == 0, 0)
+                     .otherwise(F.col("w_x1000")))
+         .localCheckpoint(eager=True))
+    model = {r["doc_id"]: r["keep"] for r in
+             score_frame(docs, w).select("doc_id", "keep").collect()}
+    assert {model.get(u) for u, k in rule.items() if k} == {True, False}
+    bench = spark.createDataFrame([(1, "nothing matches this")],
+                                  "doc_id long, text string")
+    _cur_m, audit_m = curate.curate(spark, corpus.pages_df(spark, 200),
+                                    bench, model_weights=w)
+    got_m = {r["url"]: r["quality_keep"] for r in
+             audit_m.select("url", "quality_keep").collect()}
+    assert got_m == {u: k and bool(model.get(u)) for u, k in rule.items()}
+
+
 def test_span_dedup_rewrite(spark):
     """curated_from_audit(span_dedup=True): cross-document boilerplate
     spans are stripped from all but their canonical occurrence; grain,

@@ -4,6 +4,10 @@ drop in the integrated keep-list, and per-query top-k shape."""
 
 from __future__ import annotations
 
+import random
+import re
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,3 +87,52 @@ def test_keep_list_subset_of_pure_dedup(spark, sf_dir):
     full = {r["doc_id"] for r in
             DC.q_keep_list(spark, sf_dir).collect() if r["keep"]}
     assert full <= pure
+
+
+def _shingle_twin(w, n):
+    """Pure-Python twin of the shingle builders: distinct word
+    n-shingles in first-occurrence order (NULL stays NULL)."""
+    if w is None:
+        return None
+    return list(dict.fromkeys(" ".join(w[i:i + n])
+                              for i in range(len(w) - n + 1)))
+
+
+@pytest.mark.parametrize("n", [3, 13])
+def test_shingle_builders_match_python_twin(spark, n):
+    """dedup.shingle_sql_spark and shingle_sql_duck against the twin at
+    the default width and at a web-scale width (the width follows n):
+    NULL, empty and whitespace-only text, n-1 words, exactly n words,
+    repeated shingles and a 3,000-word doc. Spark keeps the twin's
+    first-occurrence order; DuckDB's list_distinct does not, so its
+    shingles compare as a sorted distinct list."""
+    rng = random.Random(7)
+    block = [f"w{rng.randrange(40)}" for _ in range(100)]
+    words = [f"t{i}" for i in range(n + 1)]
+    texts = [None, "", " \t\n ",
+             " ".join(words[:n - 1]), " ".join(words[:n]),
+             " ".join(words[:2] * (n + 3)),
+             " ".join(block * 30)]
+    rows = list(enumerate(texts))
+    # both engines tokenize with split(trim(text), '\s+'); trim strips
+    # spaces only
+    want = {i: _shingle_twin(None if t is None
+                             else re.split(r"\s+", t.strip(" ")), n)
+            for i, t in rows}
+
+    got = {r["i"]: r["ss"] for r in (
+        spark.createDataFrame(rows, "i int, text string")
+        .withColumn("w", F.split(F.trim("text"), r"\s+"))
+        .select("i", F.expr(DD.shingle_sql_spark(n=n)).alias("ss"))
+        .collect())}
+    assert got == want
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    duck = dict(con.execute(
+        f"SELECT i, {DD.shingle_sql_duck(n=n)} FROM (SELECT i, "
+        "string_split_regex(trim(text), '\\s+') AS w FROM t)").fetchall())
+    assert {i: None if v is None else sorted(v) for i, v in duck.items()} \
+        == {i: None if v is None else sorted(v) for i, v in want.items()}
+    assert len(want[5]) == 2 and len(want[6]) <= 100  # repeats collapse

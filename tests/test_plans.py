@@ -6,6 +6,8 @@ plan shape fail here before they cost anything on a cluster."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from ocr_module_spark.operators import relational as R
@@ -13,6 +15,25 @@ from ocr_module_spark.operators import relational as R
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _split_lambdas(plan: str) -> int:
+    """Number of ``lambdafunction(...)`` bodies in a plan string that
+    evaluate ``split(``: each one re-splits the text once per array
+    element, which Catalyst produces when it inlines a computed array
+    column into a lambda (e.g. under an explode's inferred filter)."""
+    n = 0
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        n += "split(" in plan[m.end():i]
+    return n
 
 
 @pytest.fixture(scope="module")
@@ -160,6 +181,49 @@ def test_decon_ngram_flags_broadcasts_benchmark_side(spark, sf):
     plan = _plan(q_decon_ngram_flags(spark, sf))
     assert "BroadcastHashJoin" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_shingles_never_resplit_the_text(spark, sf):
+    """The word shingles (dedup.shingle_sql_spark) reference the token
+    array only outside their lambda. The explode's inferred
+    ``size(ss) > 0`` filter inlines ``w = split(trim(text), ...)``; with
+    ``w[i]`` inside the lambda that re-split the whole text per shingle
+    (4 such lambdas in ngram_flags_frame, 2 under a bare explode)."""
+    from pyspark.sql import functions as F
+
+    from ocr_module_spark.functions.decontam import (q_decon_ngram_flags,
+                                                     shingled_frame)
+    from ocr_module_spark.functions.dedup import q_dedup_ngram_jaccard
+    from ocr_module_spark.streaming.incremental import stream_decon_flags
+    d = spark.read.parquet(f"{sf}/documents.parquet")
+    pages = d.select(F.col("doc_id").cast("string").alias("url"), "text")
+    for df in (q_decon_ngram_flags(spark, sf),
+               shingled_frame(d).select(F.explode("ss")),
+               q_dedup_ngram_jaccard(spark, sf),
+               stream_decon_flags(pages, d.select("doc_id", "text"))):
+        plan = _optimized(df)
+        assert _split_lambdas(plan) == 0, plan
+
+
+def test_curate_audit_reads_quality_from_the_docs_checkpoint(spark):
+    """curate() carries the Gopher verdict as a column of the docs
+    checkpoint: the passing filter and the audit base read it there
+    instead of joining quality_frame back on doc_id. Those two joins
+    appear as four Join nodes in the audit's optimized plan (the
+    passing frame feeds three subtrees: the dedup decisions and the
+    decontamination flags' shingle side and doc list), so the plan
+    went from 10 Join nodes to 6; none of quality_frame's PII regexes
+    is evaluated."""
+    from ocr_module_spark import corpus, curate
+    from ocr_module_spark.functions.textstats import (PII_EMAIL, PII_IPV4,
+                                                      PII_PHONE)
+    bench = spark.createDataFrame([(1, "nothing matches this")],
+                                  "doc_id long, text string")
+    _cur, audit = curate.curate(spark, corpus.pages_df(spark, 40), bench)
+    plan = _optimized(audit)
+    assert len(re.findall(r"\bJoin ", plan)) == 6, plan
+    for rx in (PII_EMAIL, PII_IPV4, PII_PHONE):
+        assert rx not in plan, plan
 
 
 def test_recall_eval_brute_side_bounded_by_broadcast_sample(spark, sf):
