@@ -630,6 +630,15 @@ SQL_DEDUP_KEEP_LIST = _sql_keep_list()
 
 IDX_SIGS = 8                # minhashes stored per doc in the dedup index
 IDX_MIN_AGREE = 5           # >= 5/8 agreeing minhashes ≈ Jaccard >= 0.6
+IDX_KEY_WIDTH = 2           # minhashes per probe key (b, sig[2b] || sig[2b+1])
+# The probe's candidate keys miss no near-dup (pigeonhole): a pair that
+# agrees on no whole key agrees on at most IDX_KEY_WIDTH - 1 positions
+# of each of the IDX_SIGS / IDX_KEY_WIDTH keys, fewer than IDX_MIN_AGREE.
+assert IDX_SIGS % IDX_KEY_WIDTH == 0 and IDX_MIN_AGREE > \
+    IDX_SIGS // IDX_KEY_WIDTH * (IDX_KEY_WIDTH - 1)
+_IDX_KEYS = ["concat({})".format(", ".join(
+    f"sig[{p}]" for p in range(k, k + IDX_KEY_WIDTH)))
+    for k in range(0, IDX_SIGS, IDX_KEY_WIDTH)]
 
 
 def build_dedup_index(docs: DataFrame) -> DataFrame:
@@ -656,7 +665,6 @@ def build_dedup_index(docs: DataFrame) -> DataFrame:
 
 
 def dedup_against_index(new_docs: DataFrame, index: DataFrame,
-                        min_agree: int = IDX_MIN_AGREE,
                         exclude_self: bool = False,
                         new_idx: DataFrame | None = None) -> DataFrame:
     """Dedup a NEW batch against an existing :func:`build_dedup_index`
@@ -664,108 +672,95 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
     near-dup page is dropped without touching the stored corpus text.
 
     Per new doc: ``exact_dup`` (normalized-text md5 present in the
-    index), ``near_dup`` (>= ``min_agree`` of {IDX_SIGS} minhashes agree
-    with some indexed doc — the standard signature-agreement Jaccard
-    estimate, so verification needs ONLY the index), the best-matching
-    indexed doc_id, and ``keep``.
+    index), ``near_dup`` (>= {IDX_MIN_AGREE} of {IDX_SIGS} minhashes
+    agree position by position with some indexed doc — the standard
+    signature-agreement Jaccard estimate, so verification needs ONLY
+    the index), ``n_sig_agree`` (the best such agreement),
+    ``matched_doc`` (the smallest such indexed doc_id), and ``keep``.
+    ``exclude_self`` ignores index rows carrying the new doc's own
+    doc_id, so a replayed epoch whose index shard already landed gets
+    the same decisions.
 
-    Scale shape: exact is one SEMI equi-join on a 32-byte key (k
-    indexed copies of a boilerplate page cost one probe, not k rows);
-    near-dup agreement is counted straight off the (band, sig)
-    equi-join with map-side partial aggregation — never all-pairs, and
-    never a second pass over the pair set. Index-side stacking is a
-    projection of the stored array (no text, no recompute). Skew note:
-    the group collapse IS the boilerplate bound — a million re-serves
-    of one page share one signature array and cost ONE group row per
-    side, so the classic LSH hot-bucket (identical signatures) never
-    fans out. Residual skew is DISTINCT arrays sharing one (band, sig)
-    value; that population is bounded by dropping over-popular group
-    buckets upstream (standard LSH hygiene) — the synthetic corpora
-    never hit it, so no cap constant is pinned here.
+    Scale shape: the work follows the batch, not the index. The batch
+    collapses to its distinct signature arrays (a million re-serves of
+    one page probe once), which the planner broadcasts while they are
+    small, as an epoch's are (no hint: a corpus-sized first batch is
+    shuffled instead); the index is read in ONE streaming pass — a
+    projection of the stored arrays, no text, no grouping — and joined
+    to them on the keys ``(b, sig[2b] ||
+    sig[2b+1])`` (``_IDX_KEYS``). These keys miss no near-dup, by
+    pigeonhole (asserted next to ``IDX_SIGS``): a pair agreeing on 5 of
+    8 positions agrees on both positions of some key. A key of two
+    minhashes is also far more selective than one: a boilerplate value
+    shared by much of the index collides only where its neighbour is
+    shared too. Each hit is verified by its exact count of agreeing
+    positions, and only verified hits reach a shuffle, folded to one
+    row per batch array (plus one per hit on an index row of the batch
+    itself, which ``exclude_self`` needs and the batch bounds). The
+    exact flag is one SEMI equi-join on the 32-byte norm key (k indexed
+    copies of a boilerplate page cost one probe, not k rows); both
+    flags fold into one per-doc aggregation.
 
     ``new_idx`` is the new batch's own :func:`build_dedup_index` rows.
-    The probe reads them three times (exact key, signature groups,
-    doc→group map), so a caller that also appends the kept docs' rows
-    to the index builds them once, materializes them and passes them
-    here; ``None`` builds them from ``new_docs`` inside the plan.
+    The probe reads them up to four times (exact key, distinct arrays,
+    doc→array map, and the own ids for ``exclude_self``), so a caller
+    that also appends the kept docs' rows to the index builds them
+    once, materializes them and passes them here; ``None`` builds them
+    from ``new_docs`` inside the plan.
     """
     if new_idx is None:
         new_idx = build_dedup_index(new_docs)
-    # exact flag is MEMBERSHIP only — LEFT SEMI on norm_md5, so a
-    # boilerplate norm key shared by k indexed docs costs one hash
-    # probe, never k materialized pair rows (the join+distinct form
-    # was quadratic per norm bucket). ``exclude_self`` rides the join
-    # condition so a doc's own index row is ignored (replayed epochs
-    # stay idempotent when the caller grows the index as it drains —
-    # see streaming.run_incremental_dedup).
+    id_type = dict(index.dtypes)["doc_id"]
+    # exact flag is MEMBERSHIP only — LEFT SEMI on norm_md5; the
+    # ``exclude_self`` test rides the join condition
     exact_cond = F.col("n.norm_md5") == F.col("i.norm_md5")
     if exclude_self:
         exact_cond = exact_cond & (F.col("n.doc_id") != F.col("i.doc_id"))
     exact = (new_idx.alias("n")
              .join(index.alias("i"), exact_cond, "left_semi")
-             .select("doc_id")
-             .withColumn("exact_dup", F.lit(True)))
+             .select("doc_id", F.lit(True).alias("exact_dup"),
+                     F.lit(None).cast("int").alias("n_agree"),
+                     F.lit(None).cast(id_type).alias("match")))
 
-    # Near-dup agreement depends ONLY on the two signature arrays, so
-    # both sides collapse to their DISTINCT arrays before any pairing:
-    # on a near-dup-rich crawl thousands of re-serves of one page share
-    # one array, and the (band, sig) candidate join runs over array
-    # GROUPS (measured 24x fewer join rows on the synthetic corpus).
-    # Per group the fan-back needs only (count, min doc_id, and — for
-    # ``exclude_self`` — the second-smallest doc_id): matched_doc =
-    # min over qualifying idx docs distributes over groups.
-    id_type = dict(new_docs.dtypes)["doc_id"]
     gkey = F.md5(F.concat_ws("|", "sig").cast("binary"))
-    gidx = index.groupBy("sig").agg(
-        F.min("doc_id").alias("g_min1"))
+    probe = _band_unpivot(
+        new_idx.select("sig").distinct().select(gkey.alias("gn"), "sig"),
+        _IDX_KEYS, keep=("gn", "sig AS nsig"))
+    agree = F.expr(" + ".join(f"CAST(nsig[{p}] = sig[{p}] AS INT)"
+                              for p in range(IDX_SIGS)))
+    hits = (_band_unpivot(index, _IDX_KEYS, keep=("doc_id AS i_doc", "sig"))
+            .join(probe, ["band", "key"])
+            .select("gn", "i_doc", agree.alias("n_agree"))
+            .where(F.col("n_agree") >= IDX_MIN_AGREE))
+    keys = ["gn"]
     if exclude_self:
-        g2 = (index.join(gidx.select("sig", "g_min1"), "sig")
-              .where(F.col("doc_id") != F.col("g_min1"))
-              .groupBy("sig").agg(F.min("doc_id").alias("g_min2")))
-        gidx = gidx.join(g2, "sig", "left")
-    else:
-        gidx = gidx.withColumn("g_min2", F.lit(None).cast(id_type))
-    gidx = gidx.select(gkey.alias("gi"), "sig", "g_min1", "g_min2")
-    gnew = new_idx.select(gkey.alias("gn"), "sig").distinct()
-    new_map = new_idx.select("doc_id", gkey.alias("gn"))
-
-    def _stack_g(groups: DataFrame, key: str) -> DataFrame:
-        return groups.select(
-            key, F.posexplode("sig").alias("band", "s"))
-
-    # n_agree per candidate group pair IS the number of agreeing
-    # bands, read straight off the (band, sig) join: each array holds
-    # exactly one sig per band, so a (gn, gi) pair is hit once per
-    # agreeing band — count(*) with map-side partial agg is the
-    # zip_with fold. (The previous form re-derived it per DOC pair:
-    # distinct over the match rows, TWO array-fetch joins back to both
-    # indexes, then an interpreted zip_with/aggregate per pair — three
-    # extra shuffles of the multi-million-row pair set, all gone.)
-    # Cast keeps the historical int type.
-    scored_g = (_stack_g(gnew, "gn")
-                .join(_stack_g(gidx, "gi"), ["band", "s"])
-                .groupBy("gn", "gi")
-                .agg(F.count(F.lit(1)).cast("int").alias("n_agree"))
-                .where(F.col("n_agree") >= min_agree)
-                .join(gidx.select("gi", "g_min1", "g_min2"), "gi"))
-    fan = new_map.join(scored_g, "gn")
+        # only an index row whose doc_id is in the batch can be a doc's
+        # own: it keeps that id as ``own``; a NULL id is no doc's own
+        # and, as in the exact probe's ``!=``, matches nothing
+        own = new_idx.select(F.col("doc_id").alias("i_doc"),
+                             F.col("doc_id").alias("own"))
+        hits = (hits.where(F.col("i_doc").isNotNull())
+                .join(own, "i_doc", "left"))
+        keys.append("own")
+    near = (hits.groupBy(*keys)
+            .agg(F.max("n_agree").alias("n_agree"),
+                 F.min("i_doc").alias("match"))
+            .join(new_idx.select("doc_id", gkey.alias("gn")), "gn"))
     if exclude_self:
-        # a doc's own index row sits inside some group: step to the
-        # group's second-smallest id when the doc IS the min, and drop
-        # the group entirely when the doc was its only member
-        matched = F.when(F.col("g_min1") == F.col("doc_id"),
-                         F.col("g_min2")).otherwise(F.col("g_min1"))
-        fan = (fan.withColumn("g_match", matched)
-               .where(F.col("g_match").isNotNull()))
-    else:
-        fan = fan.withColumn("g_match", F.col("g_min1"))
-    best = (fan.groupBy("doc_id")
-            .agg(F.max("n_agree").alias("n_sig_agree"),
-                 F.min("g_match").alias("matched_doc")))
+        near = near.where(F.col("own").isNull()
+                          | (F.col("own") != F.col("doc_id")))
+    best = (exact.unionByName(near.select(
+                "doc_id", F.lit(None).cast("boolean").alias("exact_dup"),
+                "n_agree", "match"))
+            .groupBy("doc_id")
+            .agg(F.max("exact_dup").alias("exact_dup"),
+                 F.max("n_agree").alias("n_sig_agree"),
+                 F.min("match").alias("matched_doc")))
 
-    out = (new_docs.select("doc_id")
-           .join(exact, "doc_id", "left")
-           .join(best, "doc_id", "left"))
+    # ``best`` holds only the batch's duplicates, but its planner
+    # estimate is a product of join sizes: without the hint the batch's
+    # doc ids are shuffled before AQE turns the join into a broadcast
+    out = new_docs.select("doc_id").join(F.broadcast(best), "doc_id", "left")
     exact_dup = F.coalesce("exact_dup", F.lit(False))
     near_dup = F.col("matched_doc").isNotNull()
     return out.select(

@@ -113,10 +113,8 @@ def refresh(spark: SparkSession, pages_new: DataFrame, state_dir: str,
     fp_dir = os.path.join(state_dir, "fingerprints")
 
     new_fp = snapshot_fingerprints(pages_new)
-    if os.path.isdir(fp_dir):
-        old_fp = spark.read.parquet(fp_dir)
-    else:
-        old_fp = spark.createDataFrame([], "url string, fp string")
+    old_fp = sinks.read_parquet_or_empty(spark, fp_dir,
+                                         "url string, fp string")
     # materialize the diff before anything overwrites its inputs; the
     # status counts ride on the same pass
     diff, diff_counts = sinks.observe(

@@ -75,20 +75,22 @@ def n_true(cond: Column) -> Column:
 
 
 def read_parquet_or_empty(spark: SparkSession, path: str,
-                          empty_schema: Optional[str],
+                          schema: Optional[str],
                           recursive: bool = False) -> Optional[DataFrame]:
-    """``path``'s parquet data. Only when ``path`` holds no ``*.parquet``
-    data file (a no-op write leaves none to infer a schema from) is the
-    answer an empty ``empty_schema`` frame, or None without a schema.
-    Any other read failure — a corrupt part file — propagates: an
+    """``path``'s parquet data, read with ``schema`` when one is given
+    (inferring it would cost a Spark job per read) and inferred
+    otherwise. Only when ``path`` holds no ``*.parquet`` data file (a
+    no-op write leaves none) is the answer an empty ``schema`` frame, or
+    None without a schema. Any other read failure — a corrupt part
+    file — propagates, at the latest when the frame is computed: an
     unreadable shard must never pass for an empty one."""
     pattern = (os.path.join(path, "**", "*.parquet") if recursive
                else os.path.join(path, "*.parquet"))
     if not glob.glob(pattern, recursive=recursive):
-        if empty_schema is None:
+        if schema is None:
             return None
-        return spark.createDataFrame([], empty_schema)
-    reader = spark.read
+        return spark.createDataFrame([], schema)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
     return reader.parquet(path)

@@ -115,10 +115,11 @@ QUERIES = [
      "doc-grain agg + join — no all-pairs anywhere"),
     ("dedup_incremental", "incremental cross-snapshot dedup — exact "
      "flag is a LEFT SEMI membership probe on the norm key (k indexed "
-     "copies cost one probe); near-dup candidates join DISTINCT "
-     "signature-array GROUPS on (band, sig), agreement counted by "
-     "map-side partial aggregation; no per-pair array-fetch joins, no "
-     "interpreted fold, no all-pairs"),
+     "copies cost one probe); near-dup candidates stream the index "
+     "once against the BROADCAST distinct batch arrays on 2-minhash "
+     "keys (exact by pigeonhole), each hit verified by its positional "
+     "agreement count; only verified hits shuffle, then one per-doc "
+     "aggregation; no grouping of the index, no all-pairs"),
     ("text_boilerplate_lines", "host-level boilerplate line stripping — "
      "one exploded-lines partial-agg census (doc text never rides that "
      "shuffle) + a BROADCAST flag-array join with in-row "
