@@ -5,7 +5,7 @@ for, as one library call —
       → main-content extraction        (pipeline.extract — one Arrow stage)
       → quality gate                   (textstats.qf_reasons, Gopher-style)
       → near-dup keep-list             (dedup.dedup_decision_frame, MinHash-LSH → CC)
-      → eval-set decontamination       (decontam.ngram_flags_frame, shingle join)
+      → eval-set decontamination       (decontam.ngram_hits_frame, shingle join)
       → token-budget mixture selection (mix_from_audit, optional final stage)
       → curated corpus + per-stage counters
 
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import pipeline
-from .functions.decontam import ngram_flags_frame
+from .functions.decontam import contaminated, ngram_hits_frame
 from .functions.dedup import dedup_decision_frame, span_dedup_text
 from .functions.textstats import (_words, budget_select, pii_scrub,
                                   qf_reasons, tier_expr)
@@ -122,8 +122,11 @@ def curate(spark: SparkSession, pages: DataFrame,
 
     dup = dedup_decision_frame(passing).withColumnRenamed(
         "keep", "dup_keep")
-    flags = ngram_flags_frame(passing, bench_docs).select(
-        "doc_id", "contaminated")
+    # only the docs with a shingle: the audit's coalesce gives the rest
+    # the verdict ngram_flags_frame gives them (false)
+    flags = ngram_hits_frame(passing, bench_docs).select(
+        "doc_id", contaminated(F.col("n_shingles"), F.col("n_hits"))
+        .alias("contaminated"))
 
     base = (gated.join(dup, "doc_id", "left")
             .join(flags, "doc_id", "left"))

@@ -74,13 +74,17 @@ def shingled_frame(docs: DataFrame) -> DataFrame:
     return d.select("doc_id", F.expr(shingle_sql_spark()).alias("ss"))
 
 
-def ngram_flags_frame(corpus_docs: DataFrame,
-                      bench_docs: DataFrame) -> DataFrame:
-    """N-gram eval-set decontamination flags over arbitrary corpus and
-    benchmark ``(doc_id, text)`` frames, one row per corpus document:
-    n_shingles, how many collide with ANY benchmark doc's shingles, and
-    the keep/drop contamination verdict. This is the composable form a
-    real pipeline calls with its own benchmark table (tools/curate.py).
+def contaminated(n_shingles, n_hits):
+    """The contamination verdict: the doc has shingles and at least
+    DECON_FRAC_X100 % of them collide with a benchmark shingle."""
+    return (n_shingles > 0) & (n_hits * 100 >= n_shingles * DECON_FRAC_X100)
+
+
+def ngram_hits_frame(corpus_docs: DataFrame,
+                     bench_docs: DataFrame) -> DataFrame:
+    """(doc_id, n_shingles, n_hits) for every corpus doc with at least
+    one shingle: how many of its shingles collide with ANY benchmark
+    doc's shingles.
 
     Scale shape: benchmark shingles (distinct, eval-bench sized) are the
     BROADCAST side; the corpus side is one explode + one broadcast
@@ -92,19 +96,28 @@ def ngram_flags_frame(corpus_docs: DataFrame,
              .withColumn("hit", F.lit(1)))
     corpus = (shingled_frame(corpus_docs)
               .select("doc_id", F.explode("ss").alias("s")))
-    hits = (corpus.join(F.broadcast(bench), "s", "left")
+    return (corpus.join(F.broadcast(bench), "s", "left")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_shingles"),
                  F.count("hit").alias("n_hits")))
+
+
+def ngram_flags_frame(corpus_docs: DataFrame,
+                      bench_docs: DataFrame) -> DataFrame:
+    """N-gram eval-set decontamination flags over arbitrary corpus and
+    benchmark ``(doc_id, text)`` frames, one row per corpus document:
+    n_shingles, how many collide with ANY benchmark doc's shingles, and
+    the keep/drop contamination verdict (:func:`contaminated`) — the
+    per-doc hits of :func:`ngram_hits_frame`, with 0 / 0 / false for a
+    doc too short for a shingle."""
     n_sh = F.coalesce(F.col("n_shingles"), F.lit(0)).cast("long")
     n_hit = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-    return (corpus_docs.select("doc_id").join(hits, "doc_id", "left")
+    return (corpus_docs.select("doc_id")
+            .join(ngram_hits_frame(corpus_docs, bench_docs), "doc_id", "left")
             .select("doc_id",
                     n_sh.alias("n_shingles"),
                     n_hit.alias("n_hits"),
-                    ((n_sh > 0) &
-                     (n_hit * 100 >= n_sh * DECON_FRAC_X100))
-                    .alias("contaminated")))
+                    contaminated(n_sh, n_hit).alias("contaminated")))
 
 
 def contaminated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

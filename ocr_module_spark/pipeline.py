@@ -25,15 +25,19 @@ docstrings below and in SURVEY.md §2.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import TYPE_CHECKING, Iterator, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from . import oracle
 from .classify import DROP_ROLES, MIN_TEXT_LEN
 from .schemas import EXTRACT_TAGGED_SCHEMA, NODES_SCHEMA
+
+# pandas only in annotations here: every Python worker that unpickles
+# _extract_arrow imports this module, and pandas added ~0.3 s to that
+if TYPE_CHECKING:
+    import pandas as pd
 
 SALT_BUCKETS = 8
 
@@ -146,6 +150,8 @@ def extract(pages: DataFrame, repartition: bool = False,
 # ---------------------------------------------------------------------------
 
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import pandas as pd
+
     cols = [f.name for f in NODES_SCHEMA.fields]
     for pdf in batches:
         recs = []
@@ -225,12 +231,18 @@ def rewrite_placeholders_df(paragraphs: DataFrame) -> DataFrame:
     with_start = paragraphs.withColumn(
         "fml_start", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("int"))
 
-    @F.pandas_udf("string")
-    def _rewrite(text: pd.Series, start: pd.Series) -> pd.Series:
+    import pandas as pd
+
+    def _rewrite(text, start):
         return pd.Series([
             oracle.rewrite_placeholders(t, int(s)) if t else t
             for t, s in zip(text, start)
         ])
+    # the hints pandas_udf reads, as objects: postponed (string) hints
+    # would name a pd that is not a module global
+    _rewrite.__annotations__ = {"text": pd.Series, "start": pd.Series,
+                                "return": pd.Series}
+    _rewrite = F.pandas_udf(_rewrite, "string")
 
     return with_start.withColumn(
         "content",

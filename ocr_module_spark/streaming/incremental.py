@@ -198,7 +198,7 @@ def stream_decon_flags(pages_stream: DataFrame,
     the broadcast-array projection is the cheaper plan (no shuffle per
     epoch at all).
     """
-    from ..functions.decontam import DECON_FRAC_X100
+    from ..functions.decontam import contaminated
     from ..functions.dedup import shingle_sql_spark
 
     def shingled(df: DataFrame, *keep: str) -> DataFrame:
@@ -225,7 +225,7 @@ def stream_decon_flags(pages_stream: DataFrame,
         "url",
         n_sh.alias("n_shingles"),
         n_hits.alias("n_hits"),
-        ((n_sh > 0) & (n_hits * 100 >= n_sh * DECON_FRAC_X100))
+        contaminated(n_sh, n_hits)
         .alias("contaminated"))
 
 

@@ -213,7 +213,9 @@ def test_curate_audit_reads_quality_from_the_docs_checkpoint(spark):
     passing frame feeds three subtrees: the dedup decisions and the
     decontamination flags' shingle side and doc list), so the plan
     went from 10 Join nodes to 6; none of quality_frame's PII regexes
-    is evaluated."""
+    is evaluated. The audit joins only the docs with a shingle
+    (decontam.ngram_hits_frame) and coalesces the rest to not
+    contaminated, so the flags' doc-list join is gone too: 5."""
     from ocr_module_spark import corpus, curate
     from ocr_module_spark.functions.textstats import (PII_EMAIL, PII_IPV4,
                                                       PII_PHONE)
@@ -221,7 +223,7 @@ def test_curate_audit_reads_quality_from_the_docs_checkpoint(spark):
                                   "doc_id long, text string")
     _cur, audit = curate.curate(spark, corpus.pages_df(spark, 40), bench)
     plan = _optimized(audit)
-    assert len(re.findall(r"\bJoin ", plan)) == 6, plan
+    assert len(re.findall(r"\bJoin ", plan)) == 5, plan
     for rx in (PII_EMAIL, PII_IPV4, PII_PHONE):
         assert rx not in plan, plan
 
