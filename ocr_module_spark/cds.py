@@ -20,20 +20,30 @@ no option:
   without one.
 
 Each key is recorded at most once: an attempt marker is created with
-``O_EXCL`` before the recording starts and is never removed, so a host
-too slow to finish the dump pays the recording cost once, and two
-drivers starting at once never record the same key. The key hashes the
-JVM's ``java.home``, the conf dir on the class path and the jars under
-``SPARK_HOME/jars`` (names, sizes, mtimes); files of other keys are
-removed. Everything lives in ``tempfile.gettempdir()``, beside the zip
-that ``deploy.build_zip`` writes.
+``O_EXCL`` before the recording starts and is kept, so a host too slow
+to finish the dump pays the recording cost once, and two drivers
+starting at once never record the same key. The key hashes the JVM's
+``java.home``, the conf dir on the class path and the jars under
+``SPARK_HOME/jars`` (names, sizes, mtimes). Files of other keys are
+removed once unused for ``_KEEP_S`` (a mapped archive's mtime is its
+last use), so two Spark homes sharing a temp dir keep both archives.
+
+Every file lives in one private directory per user under
+``tempfile.gettempdir()``, beside the zip that ``deploy.build_zip``
+writes. The temp dir is shared, so that directory is used only when it
+is a real directory of this user that no one else can write to: a file
+planted there would otherwise be mapped as the driver's classes, or
+read as its Spark configuration.
 
 CDS refuses a non-empty directory on the class path, and the launcher
 puts the conf dir there. When that dir holds nothing but ``*.template``
 files the launch points ``SPARK_CONF_DIR`` at an empty directory, which
 changes nothing Spark reads; when it holds live configuration, no
-archive is used. The JVM's stdout is the driver's, so the CDS log tags
-are switched off.
+archive is used. Neither is one when the launcher would add anything
+else to the class path (``HADOOP_CONF_DIR`` and the like): the jars
+there are not in the key, and a directory there fails the recording
+JVM's exit. The JVM's stdout is the driver's, so the CDS log tags are
+switched off.
 """
 
 from __future__ import annotations
@@ -43,12 +53,22 @@ import dataclasses
 import hashlib
 import os
 import shutil
+import stat
 import tempfile
 import threading
 import time
+from collections.abc import Mapping
 
 _QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 _DUMP_WAIT_S = 120  # how long an exiting driver waits for the JVM's dump
+_KEEP_S = 86400  # other keys' files unused this long are removed
+
+# what the launcher adds to the driver's class path besides the conf dir
+# and SPARK_HOME/jars
+_CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                   "SPARK_PREPEND_CLASSES")
+_CLASS_PATH_CONF = ("spark.driver.extraClassPath",
+                    "spark.driver.defaultExtraClassPath")
 
 
 @dataclasses.dataclass(frozen=True)
@@ -56,15 +76,30 @@ class Plan:
     """One launch's use of the archive: the JVM flags, the conf dir to
     launch with (None: leave ``SPARK_CONF_DIR`` alone), and, when this
     launch records, the part file to publish as ``archive``."""
-    key: str
     archive: str
     java_opts: str
     conf_dir: str | None
     part: str | None = None
 
 
-def _prefix(cache_dir: str) -> str:
-    return os.path.join(cache_dir, f"ocr_module_spark-cds-{os.getuid()}-")
+def private_dir(cache_dir: str) -> str | None:
+    """This user's directory for every CDS file, created if missing, or
+    None when it cannot be trusted: not a real directory (a symlink), not
+    this user's, open to group or others, or in a temp dir where others
+    could rename it away (writable by them without the sticky bit)."""
+    parent = os.stat(cache_dir).st_mode
+    if parent & 0o022 and not parent & stat.S_ISVTX:
+        return None
+    d = os.path.join(cache_dir, f"ocr_module_spark-cds-{os.getuid()}")
+    try:
+        os.mkdir(d, 0o700)
+    except FileExistsError:
+        pass
+    st = os.lstat(d)
+    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
+            or st.st_mode & 0o077):
+        return None
+    return d
 
 
 def java_home() -> str | None:
@@ -88,11 +123,22 @@ def archive_key(java: str, conf_dir: str, jars_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
-def class_path_conf_dir(spark_home: str, cache_dir: str) -> str | None:
+def extra_class_path(conf: Mapping[str, str]) -> bool:
+    """True when the launcher would put more than the conf dir and the
+    Spark jars on the driver's class path, from the environment, from
+    ``conf`` (the session's conf) or from ``PYSPARK_SUBMIT_ARGS``."""
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    return (any(os.environ.get(v) for v in _CLASS_PATH_ENV)
+            or any(conf.get(k) for k in _CLASS_PATH_CONF)
+            or any(k in submit for k in _CLASS_PATH_CONF
+                   + ("--driver-class-path", "--properties-file")))
+
+
+def class_path_conf_dir(spark_home: str, cds_dir: str) -> str | None:
     """The conf dir to put on the class path, or None when no archive
     can be used: the effective conf dir when it is missing or empty, an
-    empty stand-in when it holds only templates, None when it holds
-    live configuration."""
+    empty stand-in in ``cds_dir`` when it holds only templates, None
+    when it holds live configuration."""
     conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     try:
         names = os.listdir(conf)
@@ -102,8 +148,11 @@ def class_path_conf_dir(spark_home: str, cache_dir: str) -> str | None:
         return conf
     if not all(n.endswith(".template") for n in names):
         return None
-    empty = _prefix(cache_dir) + "conf"
-    os.makedirs(empty, exist_ok=True)
+    empty = os.path.join(cds_dir, "conf")
+    try:
+        os.mkdir(empty, 0o700)
+    except FileExistsError:
+        pass
     return empty if not os.listdir(empty) else None
 
 
@@ -117,31 +166,32 @@ def _alive(pid: int) -> bool:
     return True
 
 
-def prune(cache_dir: str, key: str) -> None:
-    """Remove the archives, markers and part files of other keys, and
-    this key's part files whose recording process is gone."""
-    prefix = os.path.basename(_prefix(cache_dir))
-    for name in os.listdir(cache_dir):
-        if not name.startswith(prefix) or name == prefix + "conf":
-            continue
-        rest = name[len(prefix):]
-        if rest.split(".", 1)[0] == key:
-            if not rest.endswith(".part"):
-                continue
-            pid = rest.split(".")[2]
-            if not pid.isdigit() or _alive(int(pid)):
-                continue
+def prune(cds_dir: str, key: str) -> None:
+    """Remove part files whose recording process is gone, and the
+    archives and markers of other keys unused for ``_KEEP_S``."""
+    old = time.time() - _KEEP_S
+    for name in os.listdir(cds_dir):
+        path = os.path.join(cds_dir, name)
         try:
-            os.unlink(os.path.join(cache_dir, name))
-        except FileNotFoundError:
+            if name.endswith(".part"):
+                pid = name.split(".")[2]
+                if not pid.isdigit() or _alive(int(pid)):
+                    continue
+            elif (name == "conf" or name.split(".", 1)[0] == key
+                  or os.lstat(path).st_mtime > old):
+                continue
+            os.unlink(path)
+        except FileNotFoundError:  # removed by another driver
             pass
 
 
-def plan(spark_home: str, cache_dir: str | None = None) -> Plan | None:
-    """Decide how the next driver JVM uses the archive, or None for no
-    archive. Claims the recording (creates the attempt marker) when no
-    archive of the current key exists and none was attempted."""
-    if os.name != "posix":
+def plan(spark_home: str, cache_dir: str | None = None,
+         conf: Mapping[str, str] | None = None) -> Plan | None:
+    """Decide how the next driver JVM, launched with the session conf
+    ``conf``, uses the archive, or None for no archive. Claims the
+    recording (creates the attempt marker) when no archive of the
+    current key exists and none was attempted."""
+    if os.name != "posix" or extra_class_path(conf or {}):
         return None
     cache_dir = cache_dir or tempfile.gettempdir()
     if any(c.isspace() or c in "\"'\\" for c in cache_dir):
@@ -150,37 +200,40 @@ def plan(spark_home: str, cache_dir: str | None = None) -> Plan | None:
     jars = os.path.join(spark_home, "jars")
     if java is None or not os.path.isdir(jars):
         return None
-    conf = class_path_conf_dir(spark_home, cache_dir)
-    if conf is None:
+    d = private_dir(cache_dir)
+    if d is None:
         return None
-    key = archive_key(java, conf, jars)
-    prune(cache_dir, key)
-    archive = f"{_prefix(cache_dir)}{key}.jsa"
-    redirect = conf if conf == _prefix(cache_dir) + "conf" else None
+    class_conf = class_path_conf_dir(spark_home, d)
+    if class_conf is None:
+        return None
+    key = archive_key(java, class_conf, jars)
+    prune(d, key)
+    archive = os.path.join(d, f"{key}.jsa")
+    redirect = class_conf if class_conf == os.path.join(d, "conf") else None
     if os.path.isfile(archive):
-        return Plan(key, archive, f"-XX:SharedArchiveFile={archive} "
+        os.utime(archive)  # its last use, for prune
+        return Plan(archive, f"-XX:SharedArchiveFile={archive} "
                     f"-Xshare:auto {_QUIET}", redirect)
     try:
         os.close(os.open(f"{archive}.attempt",
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
+                         os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o600))
     except FileExistsError:  # recorded before (and failed) or recording now
         return None
     part = f"{archive}.{os.getpid()}.{time.time_ns()}.part"
-    return Plan(key, archive, f"-XX:ArchiveClassesAtExit={part} {_QUIET}",
+    return Plan(archive, f"-XX:ArchiveClassesAtExit={part} {_QUIET}",
                 redirect, part)
 
 
-def publish(returncode: int, part: str, archive: str) -> bool:
+def publish(returncode: int, part: str, archive: str) -> None:
     """Publish a finished recording: rename the part file to the archive
     only after its JVM exited with code 0; otherwise drop it."""
     try:
         if returncode == 0:
             os.replace(part, archive)
-            return True
-        os.unlink(part)
+        else:
+            os.unlink(part)
     except FileNotFoundError:  # no dump, or pruned by another driver
         pass
-    return False
 
 
 def publish_at_exit(proc, p: Plan) -> threading.Thread:

@@ -54,7 +54,7 @@ def get_spark(app: str = "ocr_module_spark", cores: int | None = None,
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     extra_conf = dict(extra_conf or {})
-    launch = _archive_plan()
+    launch = _archive_plan(extra_conf)
     if launch is not None:
         # defaultJavaOptions: a caller's extraJavaOptions would replace
         # the engine's flags there; the launcher puts both on the command
@@ -68,16 +68,17 @@ def get_spark(app: str = "ocr_module_spark", cores: int | None = None,
     return spark
 
 
-def _archive_plan() -> cds.Plan | None:
-    """How the JVM that getOrCreate is about to launch uses the archive;
-    None when it launches none (a JVM is running, or spark-submit's
-    gateway is) or the temp dir cannot hold one."""
+def _archive_plan(conf: dict[str, str]) -> cds.Plan | None:
+    """How the JVM that getOrCreate is about to launch with the session
+    conf ``conf`` uses the archive; None when it launches none (a JVM is
+    running, or spark-submit's gateway is) or the temp dir cannot hold
+    one."""
     if (SparkContext._gateway is not None
             or "PYSPARK_GATEWAY_PORT" in os.environ):
         return None
     from pyspark.find_spark_home import _find_spark_home
     try:
-        return cds.plan(_find_spark_home())
+        return cds.plan(_find_spark_home(), conf=conf)
     except OSError:  # e.g. a read-only temp dir
         return None
 

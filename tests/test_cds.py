@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import pathlib
+import stat
 import subprocess
 import sys
 import textwrap
@@ -56,28 +57,99 @@ def test_key_follows_jdk_conf_dir_and_jars(home):
     assert cds.archive_key("/jdk", "/conf", jars) not in (key, touched, resized)
 
 
+def _files(cache) -> list[str]:
+    return sorted(str(p.relative_to(cache))
+                  for p in pathlib.Path(cache).rglob("*"))
+
+
 def test_templates_only_conf_dir_is_redirected(home, monkeypatch):
     h, cache = home
-    conf = cds.class_path_conf_dir(str(h), cache)
-    assert conf != str(h / "conf") and os.listdir(conf) == []
+    d = cds.private_dir(cache)
+    conf = cds.class_path_conf_dir(str(h), d)
+    assert conf == os.path.join(d, "conf") and os.listdir(conf) == []
     p = cds.plan(str(h), cache)
     assert p.conf_dir == conf
     # an empty or missing conf dir goes on the class path as it is
     empty = h / "empty"
     empty.mkdir()
     monkeypatch.setenv("SPARK_CONF_DIR", str(empty))
-    assert cds.class_path_conf_dir(str(h), cache) == str(empty)
+    assert cds.class_path_conf_dir(str(h), d) == str(empty)
     monkeypatch.setenv("SPARK_CONF_DIR", str(h / "missing"))
-    assert cds.class_path_conf_dir(str(h), cache) == str(h / "missing")
+    assert cds.class_path_conf_dir(str(h), d) == str(h / "missing")
 
 
 @pytest.mark.parametrize("live", ["spark-defaults.conf", "spark-env.sh"])
 def test_live_conf_dir_means_no_archive(home, live):
     h, cache = home
     (h / "conf" / live).write_text("spark.master local[2]\n")
-    assert cds.class_path_conf_dir(str(h), cache) is None
+    assert cds.class_path_conf_dir(str(h), cds.private_dir(cache)) is None
     assert cds.plan(str(h), cache) is None
-    assert not [n for n in os.listdir(cache) if n.endswith(".attempt")]
+    assert not [n for n in _files(cache) if n.endswith(".attempt")]
+
+
+@pytest.mark.parametrize("env, conf", [
+    ({"HADOOP_CONF_DIR": "hadoop"}, {}),
+    ({"YARN_CONF_DIR": "hadoop"}, {}),
+    ({"SPARK_DIST_CLASSPATH": "/opt/hadoop/share/*"}, {}),
+    ({}, {"spark.driver.extraClassPath": "/opt/extra.jar"}),
+    ({"PYSPARK_SUBMIT_ARGS": "--driver-class-path /x.jar pyspark-shell"}, {}),
+])
+def test_more_on_the_class_path_means_no_archive(home, tmp_path, monkeypatch,
+                                                 env, conf):
+    """A non-empty directory the launcher adds to the class path (here a
+    ``HADOOP_CONF_DIR`` holding ``core-site.xml``) fails the recording
+    JVM at exit, and jars it adds are not in the key."""
+    h, cache = home
+    (tmp_path / "hadoop").mkdir()
+    (tmp_path / "hadoop" / "core-site.xml").write_text("<configuration/>\n")
+    for k in cds._CLASS_PATH_ENV + ("PYSPARK_SUBMIT_ARGS",):
+        monkeypatch.delenv(k, raising=False)
+    assert cds.plan(str(h), cache).part  # without them it records
+    for k, v in env.items():
+        monkeypatch.setenv(k, str(tmp_path / v) if v == "hadoop" else v)
+    other = tmp_path / "other"
+    other.mkdir()
+    assert cds.plan(str(h), str(other), conf=conf) is None
+    assert _files(other) == []
+
+
+def _untrusted(kind: str, cache: str) -> None:
+    """Make the private dir (or its temp dir) one that is not trusted."""
+    d = os.path.join(cache, f"ocr_module_spark-cds-{os.getuid()}")
+    if kind == "symlink":
+        target = os.path.join(cache, "elsewhere")
+        os.mkdir(target, 0o700)
+        os.symlink(target, d)
+    elif kind == "foreign":
+        os.mkdir(d, 0o700)
+        os.chown(d, os.getuid() + 1, -1)
+    elif kind == "parent":
+        os.chmod(cache, 0o777)  # writable by all, no sticky bit
+    else:
+        os.mkdir(d)
+        os.chmod(d, {"group": 0o770, "world": 0o777}[kind])
+
+
+@pytest.mark.parametrize("kind", ["symlink", "group", "world", "foreign",
+                                  "parent"])
+def test_untrusted_private_dir_means_no_archive(home, kind):
+    """Files planted in a directory another user can write would be
+    mapped as the driver's classes or read as its configuration."""
+    h, cache = home
+    if kind == "foreign" and os.getuid() != 0:
+        pytest.skip("only root can give a directory to another user")
+    _untrusted(kind, cache)
+    assert cds.private_dir(cache) is None
+    assert cds.plan(str(h), cache) is None
+    assert not [n for n in _files(cache) if n.endswith((".attempt", ".jsa"))]
+
+
+def test_sticky_world_writable_temp_dir_is_fine(home):
+    h, cache = home
+    os.chmod(cache, 0o1777)
+    assert cds.plan(str(h), cache).part
+    st = os.lstat(cds.private_dir(cache))
+    assert stat.S_IMODE(st.st_mode) == 0o700 and st.st_uid == os.getuid()
 
 
 def test_cache_dir_the_launcher_would_split_means_no_archive(home, tmp_path):
@@ -95,13 +167,19 @@ def test_record_publish_use(home):
     assert os.path.isfile(f"{rec.archive}.attempt")
     assert cds.plan(str(h), cache) is None  # claimed: no second recorder
     pathlib.Path(rec.part).write_bytes(b"archive")
-    assert cds.publish(0, rec.part, rec.archive)
+    cds.publish(0, rec.part, rec.archive)
     assert not os.path.exists(rec.part)
-    use = cds.plan(str(h), cache)
-    assert use.part is None and use.key == rec.key
-    assert use.java_opts.startswith(
-        f"-XX:SharedArchiveFile={rec.archive} -Xshare:auto")
-    assert "ArchiveClassesAtExit" not in use.java_opts
+    before = os.stat(rec.archive)
+    for _ in range(3):
+        use = cds.plan(str(h), cache)
+        assert use.part is None and use.archive == rec.archive
+        assert use.java_opts.startswith(
+            f"-XX:SharedArchiveFile={rec.archive} -Xshare:auto")
+        assert "ArchiveClassesAtExit" not in use.java_opts
+    # a published archive is never rewritten in place
+    after = os.stat(rec.archive)
+    assert (after.st_ino, after.st_size) == (before.st_ino, before.st_size)
+    assert pathlib.Path(rec.archive).read_bytes() == b"archive"
 
 
 @pytest.mark.parametrize("returncode", [1, -9])
@@ -109,7 +187,7 @@ def test_failed_or_killed_recording_is_never_published(home, returncode):
     h, cache = home
     rec = cds.plan(str(h), cache)
     pathlib.Path(rec.part).write_bytes(b"half an archive")
-    assert not cds.publish(returncode, rec.part, rec.archive)
+    cds.publish(returncode, rec.part, rec.archive)
     assert not os.path.exists(rec.archive) and not os.path.exists(rec.part)
     assert cds.plan(str(h), cache) is None  # and never attempted again
 
@@ -142,36 +220,45 @@ def test_watcher_publishes_only_a_clean_exit(home):
                         "killed": (False, False)}
 
 
-def test_published_archive_is_never_rewritten(home):
+def test_prune(home):
+    """Dead recorders' part files go, of any key; other keys' archives
+    and markers go once unused for a day, so two Spark homes that share
+    a temp dir do not delete each other's archive on every launch."""
+    h, cache = home
+    rec = cds.plan(str(h), cache)
+    d = os.path.dirname(rec.archive)
+    key = os.path.basename(rec.archive)[:-len(".jsa")]
+    old, recent = "0123456789abcdef", "fedcba9876543210"
+    files = {
+        f"{old}.jsa": True, f"{old}.jsa.attempt": True,
+        f"{recent}.jsa": False, f"{recent}.jsa.attempt": False,
+        f"{recent}.jsa.{os.getpid()}.1.part": False,  # live recorder
+        f"{recent}.jsa.999999999.1.part": True,  # recorder gone
+        f"{key}.jsa.999999999.1.part": True,
+    }
+    for name in files:
+        pathlib.Path(d, name).write_bytes(b"x")
+    two_days_ago = time.time() - 2 * 86400
+    for name in (f"{old}.jsa", f"{old}.jsa.attempt",
+                 f"{key}.jsa.attempt"):  # this key's stays whatever its age
+        os.utime(os.path.join(d, name), (two_days_ago, two_days_ago))
+    pathlib.Path(rec.part).write_bytes(b"x")  # live recorder: this process
+    cds.prune(d, key)
+    left = set(os.listdir(d))
+    assert {n for n, gone in files.items() if gone} & left == set()
+    assert {n for n, gone in files.items() if not gone} <= left
+    assert {os.path.basename(rec.part), f"{key}.jsa.attempt", "conf"} <= left
+
+
+def test_mapping_an_archive_marks_its_use(home):
     h, cache = home
     rec = cds.plan(str(h), cache)
     pathlib.Path(rec.part).write_bytes(b"archive")
     cds.publish(0, rec.part, rec.archive)
-    before = os.stat(rec.archive)
-    for _ in range(3):
-        assert cds.plan(str(h), cache).part is None
-    after = os.stat(rec.archive)
-    assert (after.st_ino, after.st_mtime_ns, after.st_size) == (
-        before.st_ino, before.st_mtime_ns, before.st_size)
-
-
-def test_prune_keeps_only_the_current_key(home):
-    h, cache = home
-    rec = cds.plan(str(h), cache)
-    prefix = os.path.basename(rec.archive)[:-len(f"{rec.key}.jsa")]
-    stale = [f"{prefix}0123456789abcdef.jsa",
-             f"{prefix}0123456789abcdef.jsa.attempt",
-             f"{prefix}0123456789abcdef.jsa.{os.getpid()}.1.part",
-             # this key's part file of a recorder that is gone
-             f"{os.path.basename(rec.archive)}.999999999.1.part"]
-    for name in stale:
-        pathlib.Path(cache, name).write_bytes(b"x")
-    pathlib.Path(rec.part).write_bytes(b"x")  # live recorder: this process
-    cds.prune(cache, rec.key)
-    left = sorted(os.listdir(cache))
-    assert not set(stale) & set(left)
-    assert os.path.basename(rec.part) in left
-    assert f"{os.path.basename(rec.archive)}.attempt" in left
+    two_days_ago = time.time() - 2 * 86400
+    os.utime(rec.archive, (two_days_ago, two_days_ago))
+    cds.plan(str(h), cache)
+    assert os.stat(rec.archive).st_mtime > time.time() - 60
 
 
 _DRIVER = textwrap.dedent("""
@@ -185,8 +272,8 @@ _DRIVER = textwrap.dedent("""
 
 
 def _driver(tmp_path, conf: dict) -> subprocess.CompletedProcess:
-    """Run a driver that starts a session and one job with TMPDIR (the
-    archive's dir) in ``tmp_path``."""
+    """Run a driver that starts a session and one job with TMPDIR (where
+    the archive's private dir goes) in ``tmp_path``."""
     env = {k: v for k, v in os.environ.items()
            if not k.startswith("PYSPARK_GATEWAY")}
     env["TMPDIR"] = str(tmp_path)
@@ -196,9 +283,11 @@ def _driver(tmp_path, conf: dict) -> subprocess.CompletedProcess:
 
 
 def _no_archive(cache_dir) -> bool:
-    """True when this Spark home's conf dir holds live configuration."""
+    """True when this host's class path rules out an archive: a conf dir
+    with live configuration, or more than it and the jars."""
     from pyspark.find_spark_home import _find_spark_home
-    return cds.class_path_conf_dir(_find_spark_home(), str(cache_dir)) is None
+    return cds.extra_class_path({}) or cds.class_path_conf_dir(
+        _find_spark_home(), cds.private_dir(str(cache_dir))) is None
 
 
 def test_garbage_archive_still_starts_a_session(tmp_path):
@@ -223,8 +312,8 @@ def test_second_launch_maps_the_recorded_archive(tmp_path):
     first = _driver(tmp_path, {})
     assert first.returncode == 0, first.stderr
     assert first.stdout == "RESULT 45 None\n", first.stdout
-    published = [n for n in os.listdir(tmp_path) if n.endswith(".jsa")]
-    assert len(published) == 1, os.listdir(tmp_path)
+    published = [n for n in _files(tmp_path) if n.endswith(".jsa")]
+    assert len(published) == 1, _files(tmp_path)
     log = tmp_path / "class-load.log"
     second = _driver(tmp_path, {
         "spark.driver.defaultJavaOptions": "-Dcds.test=kept",
